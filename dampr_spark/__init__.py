@@ -19,8 +19,17 @@ single-machine MapReduce/dataflow library.  This package provides:
   Structured Streaming surface.
 """
 
-from dampr_spark.session import get_spark
-
 __version__ = "0.1.0"
 
 __all__ = ["get_spark", "__version__"]
+
+
+def __getattr__(name: str):
+    # Lazy (PEP 562): importing the package must not import pyspark, so the
+    # worker bootstrap ``python -m dampr_spark._daemon`` can fix the import
+    # path before pyspark's first import.
+    if name == "get_spark":
+        from dampr_spark.session import get_spark
+
+        return get_spark
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")

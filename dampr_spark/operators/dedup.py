@@ -120,14 +120,6 @@ def char_shingles(col: str, k: int = 5) -> Column:
     return F.array_distinct(F.transform(idx, lambda i: c.substr(i, F.lit(k))))
 
 
-def shingle_hashes(shingles: Column) -> Column:
-    """xxhash64 each shingle ONCE. Materialize this as a real column before
-    computing signatures — the signature references it num_perm times, and an
-    inlined expression would re-tokenize + re-hash per permutation (a
-    measured 60× slowdown at sf0.1)."""
-    return F.transform(shingles, lambda s: F.xxhash64(s))
-
-
 def minhash_signature(hashes: Column, num_perm: int = 64) -> Column:
     """MinHash signature from pre-hashed shingles: permutation j re-hashes
     each shingle hash with seed j (xxhash64 of the pair) and takes the min —
@@ -598,6 +590,7 @@ def minhash_lsh_candidates(
     run with :func:`lsh_band_audit`: one signature pass prices each
     config's bucket occupancy and the cap's dropped pair/doc mass.
     """
+    _check_salt_bucket(salt_bucket)
     # One Arrow-vectorized pass does shingling + hashing + permutations
     # (the pure-SQL form evaluates interpreted higher-order lambdas and is
     # ~20× slower); the band key is an 8-byte xxhash64 per (doc, band).
@@ -690,6 +683,13 @@ def minhash_lsh_candidates(
         .select(F.col("p.a").alias("id_a"), F.col("p.b").alias("id_b"))
         .distinct()
     )
+
+
+def _check_salt_bucket(salt_bucket: int) -> None:
+    """Reject a salt size that would change results: below 1 the chunk
+    arithmetic divides by zero (0) or drops pairs silently (negative)."""
+    if salt_bucket < 1:
+        raise ValueError(f"salt_bucket={salt_bucket} must be >= 1 (docs per salted chunk)")
 
 
 def _sorted_pairs(ids: Column) -> Column:
@@ -1182,13 +1182,6 @@ def simhash(col: str = "text", bits: int = 64) -> Column:
     return simhash_bands(simhash_votes(col, bits), bits)
 
 
-def hamming_distance(a: Column, b: Column, bits: int = 64) -> Column:
-    """Hamming distance between two banded simhash arrays (16-bit bands):
-    popcount of xor per band, summed. bit_count is a Spark built-in."""
-    xors = F.zip_with(a, b, lambda x, y: F.bit_count(x.bitwiseXOR(y)))
-    return F.aggregate(xors, F.lit(0), lambda acc, x: acc + x)
-
-
 def simhash_dedup(
     df: DataFrame,
     text_col: str = "text",
@@ -1235,6 +1228,7 @@ def simhash_dedup(
     :func:`lsh_band_audit` (include_simhash=True, simhash_configs=...)
     prices each candidate banding's bucket occupancy and the cap's
     dropped mass before the pair join."""
+    _check_salt_bucket(salt_bucket)
     _simhash_geometry(bits, bands)
     if max_hamming >= bands:
         raise ValueError(

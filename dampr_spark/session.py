@@ -13,6 +13,22 @@ knobs we own are the ones below.  They are chosen so the same code runs on
   raise ``initialPartitionNum`` instead of this code changing.
 - Arrow enabled so pandas-UDF operators (the custom-operator escape hatch) use
   vectorized batch transfer rather than row-at-a-time pickling.
+
+Python workers start through a bootstrap, ``dampr_spark/_daemon.py``
+(``spark.python.daemon.module``). Spark puts ``pyspark.zip``, the py4j zip
+and the spark-core jar at the front of the workers' path, and every task's
+``importlib.invalidate_caches()`` makes each cached zip importer re-read its
+archive's directory. When the same pyspark is installed as a directory (its
+``pyspark/version.py`` byte-identical to the zip's, py4j next to it), the
+bootstrap takes those archives off the path, and pyspark loads from the
+directory. Otherwise it leaves the path as Spark set it (the fallback is
+Spark's stock behaviour). Measured on a 4-vCPU host with Spark 4.1.2 and
+Python 3.11, for trivial tasks on a reused worker: 0.069-0.081 s of worker
+CPU per task with the stock path, 0.008-0.009 s with the bootstrap. The
+package's parent directory goes on the workers' ``PYTHONPATH`` so they can
+import the bootstrap from any working directory. A plain ``SparkSession``
+(such as one handed to ``__spark_entry__.py``'s ``entry``/``queries``) does
+not get the bootstrap unless it sets the same two confs.
 """
 
 from __future__ import annotations
@@ -22,6 +38,10 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+# The directory that holds the ``dampr_spark`` package: put on the workers'
+# path so they can run the bootstrap whatever the working directory.
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -36,6 +56,8 @@ def get_spark(
     reused (Spark ignores conf on getOrCreate of a live session).
     """
     cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS") or "*"
+    extra_conf = dict(extra_conf or {})
+    worker_pythonpath = [_PACKAGE_ROOT, extra_conf.pop("spark.executorEnv.PYTHONPATH", "")]
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -66,7 +88,11 @@ def get_spark(
         # files of collected frames. Read ONCE at SparkContext
         # construction — it cannot be enabled later at runtime.
         .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
+        # Python workers start through the bootstrap (dampr_spark/_daemon.py),
+        # which takes Spark's archives off their import path.
+        .config("spark.python.daemon.module", "dampr_spark._daemon")
+        .config("spark.executorEnv.PYTHONPATH", os.pathsep.join(p for p in worker_pythonpath if p))
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -9,6 +9,9 @@ column pruning intact (everything returns a lazy DataFrame — no collect).
 
 from __future__ import annotations
 
+import os
+import stat
+
 from pyspark.sql import DataFrame, SparkSession
 
 # The driver's TPC-H-ish star schema + extension tables (TESTDATA.md).
@@ -32,9 +35,25 @@ TABLES = (
 # infer 0.10-0.12 s vs 0.02 s with an explicit schema); a bench pass builds
 # 94 read_table calls per run, so inference alone cost ~9 s per cold pass.
 # Keyed by applicationId so a fresh session (driver-owned or test) re-infers
-# against whatever data landed; the files themselves are still scanned
-# fresh by every query — this caches the column list, not results.
-_SCHEMA_CACHE: dict[tuple[str, str], "object"] = {}
+# against whatever data landed; each entry carries the table's freshness
+# token, so a table rewritten mid-session is re-inferred. The files
+# themselves are still scanned fresh by every query — this caches the
+# column list, not results.
+_SCHEMA_CACHE: dict[tuple[str, str], tuple] = {}
+
+
+def _freshness(path: str) -> tuple | None:
+    """(mtime, size) of a parquet file, plus those of every entry when it is
+    a directory; None when the path is not a local one (no memo then)."""
+    try:
+        st = os.stat(path)
+        token = (st.st_mtime_ns, st.st_size)
+        if stat.S_ISDIR(st.st_mode):
+            with os.scandir(path) as it:
+                token += tuple(sorted((e.name, e.stat().st_mtime_ns, e.stat().st_size) for e in it))
+        return token
+    except OSError:
+        return None
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -54,10 +73,12 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = f"{sf_dir}/{name}.parquet"
     key = (spark.sparkContext.applicationId, path)
-    schema = _SCHEMA_CACHE.get(key)
-    if schema is None:
+    token = _freshness(path)
+    memo_token, schema = _SCHEMA_CACHE.get(key, (None, None))
+    if token is None or memo_token != token:
         df = spark.read.parquet(path)
-        _SCHEMA_CACHE[key] = df.schema
+        if token is not None:
+            _SCHEMA_CACHE[key] = (token, df.schema)
     else:
         df = spark.read.schema(schema).parquet(path)
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":

@@ -19,6 +19,8 @@ red suite. The fix (VERDICT r14 next-round #1) is a MEASURED fast lane:
 - Unknown node ids in the list are ignored and NEW tests run in the
   fast lane by default — the lane degrades to "run everything", never
   to silently skipping fresh work.
+- A default run prints the lane file's path and how many tests it
+  deselected.
 """
 
 from __future__ import annotations
@@ -64,8 +66,6 @@ def pytest_collection_modifyitems(config, items):
     if any("::" in str(a) or str(a).endswith(".py") for a in args):
         return
     slow = _slow_set()
-    if not slow:
-        return
     keep, dropped = [], []
     for item in items:
         # Match on "test_file.py::rest" regardless of invocation dir.
@@ -78,3 +78,12 @@ def pytest_collection_modifyitems(config, items):
     if dropped:
         config.hook.pytest_deselected(items=dropped)
         items[:] = keep
+    # Say what the lane skipped, so a default run is never mistaken for
+    # the full suite.
+    reporter = config.pluginmanager.get_plugin("terminalreporter")
+    if reporter is not None:
+        reporter.ensure_newline()
+        reporter.write_line(
+            f"fast lane {_FAST_LANE}: deselected {len(dropped)} of {len(dropped) + len(keep)} "
+            "tests (SPARK_GRAFT_FULL_TESTS=1 runs them all)"
+        )

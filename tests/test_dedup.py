@@ -1791,3 +1791,11 @@ def test_probe_pairs_planted_boundary_pair(spark):
     else:
         assert (1, 2) not in plain  # the boundary blindness, demonstrated
         assert (1, 2) in probe  # and its fix
+
+
+@pytest.mark.parametrize("salt_bucket", [0, -1])
+@pytest.mark.parametrize("op", [dedup.minhash_lsh_candidates, dedup.simhash_dedup])
+def test_salt_bucket_below_one_raises_at_call(planted, op, salt_bucket):
+    # 0 used to die mid-stage (DIVIDE_BY_ZERO), -1 to drop pairs silently.
+    with pytest.raises(ValueError, match="salt_bucket"):
+        op(planted, salt_bucket=salt_bucket)
