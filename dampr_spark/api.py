@@ -13,7 +13,10 @@ follow the reference DSL (`dampr/dampr.py`):
   k-way merge, dampr/runner.py:352-374) — we sort grouped results before
   collection to preserve every ordering the reference tests assert;
 - ``a_group_by`` reduces with a map-side combiner (dampr/dampr.py:386-404) —
-  here ``reduceByKey``, whose partial aggregation is the same optimization.
+  here one fused ``mapPartitions`` pass (``count()`` tallies through a C-level
+  ``collections.Counter``), then a single ``partitionBy`` shuffle (``hash``
+  for str/int keys, ``portable_hash`` for the rest) and one reduce-side
+  merge (see ``ARReduce``).
 
 Execution differences (deliberate, Spark-first):
 - fusion of consecutive map/filter/flat_map is Spark's pipelining within a
@@ -38,13 +41,22 @@ import os
 import pickle
 import shutil
 import tempfile
+from collections import Counter
 from collections.abc import Callable, Iterable, Iterator
 from itertools import islice
 
 from pyspark import RDD, StorageLevel
+from pyspark.rdd import portable_hash
+from pyspark.shuffle import Aggregator, ExternalMerger
 from pyspark.sql import DataFrame, SparkSession
 
 _identity = lambda x: x  # noqa: E731
+
+
+def _one(_v) -> int:
+    """count()'s value function; ``_fused_combiner`` recognises it by
+    identity and tallies with ``Counter`` instead of a per-item binop."""
+    return 1
 
 logger = logging.getLogger(__name__)
 _warned_kwargs: set[tuple[str, str]] = set()
@@ -427,10 +439,11 @@ class PBase:
         :687) are accepted for call-site compatibility but are deliberate
         no-ops on Spark: a checkpoint-time combiner exists to shrink the
         reference's on-disk intermediate before its reduce stage, and
-        Catalyst/RDD ``reduceByKey`` already applies map-side partial
-        aggregation wherever the downstream reduce is associative — running
-        a second combiner here would do redundant work. Warned once so a
-        ported pipeline's behavior drift is visible, not silent."""
+        the fused ``a_group_by`` combine (and Catalyst's partial aggregate)
+        already combine map-side wherever the downstream reduce is
+        associative — running a second combiner here would do redundant
+        work. Warned once so a ported pipeline's behavior drift is visible,
+        not silent."""
         _warn_ignored_kwargs("checkpoint", kwargs, {"combiner", "options"})
         return PMap(
             self._rdd.persist(StorageLevel.DISK_ONLY),
@@ -656,7 +669,7 @@ class PMap(PBase):
 
     def count(self, key: Callable = _identity, **_) -> "PMap":
         """(key(v), 1) summed with combiner → (k, n) (dampr/dampr.py:439-448)."""
-        return self.a_group_by(key, lambda _v: 1).sum()
+        return self.a_group_by(key, _one).sum()
 
     def mean(self, key: Callable = lambda _v: 1, value: Callable = _identity) -> "PMap":
         """Associative (sum, count) pairs, then divide (dampr/dampr.py:450-467)."""
@@ -983,9 +996,27 @@ class PReduce(PBase):
 
 # Local-combine dict spill threshold for the fused associative reduce: on
 # key cardinalities past this, partial dicts are flushed downstream (the
-# following reduceByKey merges duplicates), bounding executor memory the
-# same way the generic map-side combiner's spill does.
+# reduce-side merge after the shuffle folds duplicates), bounding executor
+# memory the same way the generic map-side combiner's spill does.
 _FUSED_COMBINE_MAX_KEYS = 1 << 20
+# Items per Counter.update call on the count path: the spill threshold is
+# checked between chunks, so a tally holds under max_keys + chunk keys. A
+# 4096-item list stays in cache; 65536-item chunks counted a 22.5 MB word
+# corpus ~15% slower in one process.
+_COUNT_CHUNK = 1 << 12
+
+
+def _partition_hash(k) -> int:
+    """Shuffle partitioner for the fused reduce: ``hash(k)`` for exact
+    ``str``/``int`` keys, which is what ``portable_hash`` returns for them
+    minus its per-call ``os.environ`` check (Spark fixes ``PYTHONHASHSEED``
+    for every worker, pyspark/core/context.py). Every other key — ``None``,
+    tuples (which may hold ``None``), subclasses — goes through
+    ``portable_hash`` so its placement stays stable across workers."""
+    t = type(k)
+    if t is str or t is int:
+        return hash(k)
+    return portable_hash(k)
 
 
 def _fused_combiner(ops: tuple, key: Callable, vf: Callable, binop: Callable):
@@ -993,15 +1024,23 @@ def _fused_combiner(ops: tuple, key: Callable, vf: Callable, binop: Callable):
     C-level map/filter/chain.from_iterable — no per-op Python generator
     frames), then key-extract + locally reduce into a bounded dict.
 
+    ``count()`` (``vf is _one``, ``binop is operator.add``) tallies with
+    ``Counter.update`` — a C loop — over chunks of the keys; every other
+    reduce runs the Python dict loop with the user's ``binop``.
+
     The spill threshold is read DRIVER-SIDE here and captured in the
     closure (a module-global read inside ``combine`` would resolve against
     the executor worker's fresh import and ignore test overrides)."""
     from itertools import chain as _chain
 
     _max_keys = _FUSED_COMBINE_MAX_KEYS
+    _chunk = min(_max_keys, _COUNT_CHUNK)
+    _second = operator.itemgetter(1)
+    counting = vf is _one and binop is operator.add
+    ident = key is _identity
 
     def combine(it: Iterator) -> Iterator:
-        vals: Iterator = (kv[1] for kv in it)
+        vals: Iterator = map(_second, it)
         for op, f in ops:
             if op == "map":
                 vals = map(f, vals)
@@ -1009,9 +1048,19 @@ def _fused_combiner(ops: tuple, key: Callable, vf: Callable, binop: Callable):
                 vals = filter(f, vals)
             else:  # flat_map
                 vals = _chain.from_iterable(map(f, vals))
+        if counting:
+            keys = vals if ident else map(key, vals)
+            c: Counter = Counter()
+            while chunk := list(islice(keys, _chunk)):
+                c.update(chunk)
+                if len(c) >= _max_keys:
+                    yield from c.items()
+                    c.clear()
+            yield from c.items()
+            return
         d: dict = {}
         for v in vals:
-            k = key(v)
+            k = v if ident else key(v)
             nv = vf(v)
             if k in d:
                 d[k] = binop(d[k], nv)
@@ -1025,17 +1074,57 @@ def _fused_combiner(ops: tuple, key: Callable, vf: Callable, binop: Callable):
     return combine
 
 
+def _merge_sorted(binop: Callable):
+    """Reduce side of the fused path with ``sort=True``: the partition is
+    materialised for the sort anyway, so fold the partial combiners into a
+    dict, sort by key and emit ``(k, (k, v))`` in one pass."""
+
+    def merge(it: Iterator) -> list:
+        d: dict = {}
+        for k, v in it:
+            if k in d:
+                d[k] = binop(d[k], v)
+            else:
+                d[k] = v
+        return [(k, (k, v)) for k, v in sorted(d.items(), key=operator.itemgetter(0))]
+
+    return merge
+
+
+def _merge_spilling(binop: Callable, memory_mb: float, serializer):
+    """Reduce side of the fused path with ``sort=False``: ``reduceByKey``'s
+    own spilling ``ExternalMerger`` over the partial combiners."""
+    agg = Aggregator(_identity, binop, binop)
+
+    def merge(it: Iterator) -> Iterator:
+        merger = ExternalMerger(agg, memory_mb, serializer)
+        merger.mergeCombiners(it)
+        return merger.items()
+
+    return merge
+
+
 class ARReduce(PBase):
-    """Associative reduce: map-side combine via reduceByKey — the Spark
-    native of the reference's ReducedWriter/PartialReduceCombiner
-    (dampr/dampr.py:661-708, dampr/dataset.py:84-117)."""
+    """Associative reduce with a map-side combine — the Spark native of the
+    reference's ReducedWriter/PartialReduceCombiner (dampr/dampr.py:661-708,
+    dampr/dataset.py:84-117).
+
+    The upstream value-op chain of the ``a_group_by`` source, key/value
+    extraction and a bounded local combine run in one
+    ``mapPartitions`` (``_fused_combiner``; ``count()`` tallies with a
+    C-level ``Counter``). Its rows are already combined, so they cross ONE
+    ``partitionBy`` shuffle keyed by ``_partition_hash`` (``hash`` for exact
+    str/int keys, ``portable_hash`` for everything else) and meet one
+    reduce-side merge — no second local combine, as ``reduceByKey`` would
+    run. With ``sort=True`` that merge also sorts and re-keys; with
+    ``sort=False`` it is ``reduceByKey``'s spilling ``ExternalMerger``."""
 
     def __init__(
         self,
         rdd: RDD | Callable[[], RDD],
         spark: SparkSession,
-        parents: tuple = (),
-        fuse_src: tuple | None = None,
+        parents: tuple,
+        fuse_src: tuple,
     ):
         super().__init__(rdd, spark, parents=parents)
         # (parent PMap, key fn, value fn) from a_group_by — consulted at
@@ -1044,36 +1133,30 @@ class ARReduce(PBase):
 
     def reduce(self, binop: Callable, reduce_buffer: int | None = None, sort: bool = True) -> PMap:
         """``reduce_buffer`` (reference dampr/dampr.py:661-691) sizes the
-        reference's in-memory partial-reduce map before it spills; Spark's
-        ``reduceByKey`` map-side combine manages its own spill threshold, so
-        the knob is a documented no-op here (warned once, not silent)."""
+        reference's in-memory partial-reduce map before it spills; here the
+        fused combiner has its own bound (``_FUSED_COMBINE_MAX_KEYS``), so
+        the knob is a documented no-op (warned once, not silent)."""
         if reduce_buffer is not None:
             _warn_ignored_kwargs("ARReduce.reduce", {"reduce_buffer": reduce_buffer}, {"reduce_buffer"})
 
-        fuse_src = self._fuse_src
+        src, key, vf = self._fuse_src
 
         def build() -> RDD:
-            if fuse_src is not None:
-                # Fused path: chain re-derived NOW (not at a_group_by time)
-                # so shared parents persisted by the runner in the meantime
-                # stop the walk and are reused, not recomputed.
-                src, key, vf = fuse_src
-                base, ops = src._fused_chain()
-                combined = base._rdd.mapPartitions(
-                    _fused_combiner(ops, key, vf, binop)
-                )
-                reduced = combined.reduceByKey(binop)
-            else:
-                reduced = self._rdd.reduceByKey(binop)
+            # Chain re-derived NOW (not at a_group_by time) so shared
+            # parents persisted by the runner in the meantime stop the walk
+            # and are reused, not recomputed.
+            base, ops = src._fused_chain()
+            combined = base._rdd.mapPartitions(_fused_combiner(ops, key, vf, binop))
+            shuffled = combined.partitionBy(None, _partition_hash)
             if sort:
                 # Partition-local sort + merge-on-read (see PReduce.reduce):
-                # saves a full range shuffle + its sampling job — measured
-                # 5.0 -> 3.9 s on the 745 MB fluent TF-IDF count.
-                reduced = reduced.mapPartitions(
-                    lambda it: sorted(it, key=lambda kv: kv[0]),
-                    preservesPartitioning=True,
-                )
-            return reduced.map(lambda kv: (kv[0], (kv[0], kv[1])))
+                # no range shuffle, no sampling job.
+                return shuffled.mapPartitions(_merge_sorted(binop))
+            merged = shuffled.mapPartitions(
+                _merge_spilling(binop, combined._memory_limit(), combined.ctx.serializer),
+                preservesPartitioning=True,
+            )
+            return merged.map(lambda kv: (kv[0], (kv[0], kv[1])))
 
         return PMap(build, self._spark, parents=(self,), psorted=sort)
 
@@ -1283,12 +1366,14 @@ class Dampr:
                     f.seek(start - 1)
                     f.readline()
                 pos = f.tell()
+                # pos advances by each line's byte length: a tell() per
+                # line is an lseek syscall.
                 while pos < end:
                     line = f.readline()
                     if not line:
                         break
                     yield (pos, line.decode("utf-8", "replace").rstrip("\n"))
-                    pos = f.tell()
+                    pos += len(line)
 
         sc = cls._session().sparkContext
         rdd = sc.parallelize(splits, max(1, len(splits))).flatMap(read_split)

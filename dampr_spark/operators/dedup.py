@@ -27,6 +27,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from dampr_spark.functions.text import fingerprint
+from dampr_spark.functions.udf import series_udf
 from dampr_spark.operators.pinning import pin
 
 def _ensure_parallelism(df: DataFrame) -> DataFrame:
@@ -172,7 +173,6 @@ def minhash_text_signature_udf(num_perm: int = 64, shingle_k: int = 5, seed: int
     import numpy as np
     import pandas as pd
     from pyspark.sql import types as T
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
 
     assert shingle_k <= 8, "packed byte shingles support k ≤ 8"
     rng = random.Random(seed)
@@ -190,9 +190,7 @@ def minhash_text_signature_udf(num_perm: int = 64, shingle_k: int = 5, seed: int
         x = (x * np.uint64(0x94D049BB133111EB)) & np.uint64(0xFFFFFFFFFFFFFFFF)
         return x ^ (x >> np.uint64(31))
 
-    # Explicit SCALAR eval type: `from __future__ import annotations` turns
-    # pd.Series hints into strings the type-hint inference can't resolve.
-    @pandas_udf(T.ArrayType(T.LongType()), PandasUDFType.SCALAR)
+    @series_udf(T.ArrayType(T.LongType()))
     def sig(texts):
         n = len(texts)
         if n == 0:
@@ -1092,12 +1090,11 @@ def simhash_bands_udf(bits: int = 64, bands: int = 4):
     import numpy as np
     import pandas as pd
     from pyspark.sql import types as T
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
 
     n_bands = bands
     pow2 = (np.uint64(1) << np.arange(width, dtype=np.uint64)).astype(np.int64)
 
-    @pandas_udf(T.ArrayType(T.LongType()), PandasUDFType.SCALAR)
+    @series_udf(T.ArrayType(T.LongType()))
     def bands_udf(hash_arrays):
         n = len(hash_arrays)
         if n == 0:
@@ -1138,7 +1135,6 @@ def simhash_multi_bands_udf(configs: tuple[tuple[int, int], ...]):
     import numpy as np
     import pandas as pd
     from pyspark.sql import types as T
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
 
     max_bits = max(b for b, _ in cfgs)
     pows = [
@@ -1146,9 +1142,7 @@ def simhash_multi_bands_udf(configs: tuple[tuple[int, int], ...]):
         for w in widths
     ]
 
-    @pandas_udf(
-        T.ArrayType(T.ArrayType(T.LongType())), PandasUDFType.SCALAR
-    )
+    @series_udf(T.ArrayType(T.ArrayType(T.LongType())))
     def multi_bands_udf(hash_arrays):
         n = len(hash_arrays)
         if n == 0:

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from dampr_spark.functions.vector import cosine, valid_vector, dot
+from dampr_spark.functions.udf import series_udf
 from dampr_spark.operators.graph import _round_half_up
 from dampr_spark.operators.pinning import pin_once as _pin_once
 
@@ -124,11 +125,10 @@ class IVFIndex:
         assert self.centroids is not None, "call fit() first"
         import pandas as pd
         from pyspark.sql import types as T
-        from pyspark.sql.functions import PandasUDFType, pandas_udf
 
         ct = self.centroids.T  # (dim, n_lists)
 
-        @pandas_udf(T.IntegerType(), PandasUDFType.SCALAR)
+        @series_udf(T.IntegerType())
         def nearest_list(vecs):
             if not len(vecs):
                 return pd.Series([], dtype="int32")
@@ -200,13 +200,12 @@ class IVFIndex:
         assert self.centroids is not None, "call fit() first"
         import pandas as pd
         from pyspark.sql import types as T
-        from pyspark.sql.functions import PandasUDFType, pandas_udf
         from pyspark.sql.window import Window
 
         c = self.centroids
         nprobe = min(self.nprobe, len(c))
 
-        @pandas_udf(T.ArrayType(T.IntegerType()), PandasUDFType.SCALAR)
+        @series_udf(T.ArrayType(T.IntegerType()))
         def probe_lists(vecs):
             out = []
             for v in vecs:
@@ -251,11 +250,10 @@ class IVFIndex:
         one batch matmul per partition."""
         import pandas as pd
         from pyspark.sql import types as T
-        from pyspark.sql.functions import PandasUDFType, pandas_udf
 
         c = self.centroids
 
-        @pandas_udf(T.ArrayType(T.IntegerType()), PandasUDFType.SCALAR)
+        @series_udf(T.ArrayType(T.IntegerType()))
         def top_lists(vecs):
             if not len(vecs):
                 return pd.Series([], dtype=object)
@@ -2042,12 +2040,11 @@ class ProductQuantizer:
         assert self.codebooks is not None, "call fit() first"
         import pandas as pd
         from pyspark.sql import types as T
-        from pyspark.sql.functions import PandasUDFType, pandas_udf
 
         books = self.codebooks
         m, k, dsub = books.shape
 
-        @pandas_udf(T.ArrayType(T.ByteType()), PandasUDFType.SCALAR)
+        @series_udf(T.ArrayType(T.ByteType()))
         def codes(vecs):
             if not len(vecs):
                 return pd.Series([], dtype="object")

@@ -13,9 +13,12 @@ audited round 10), so file-granular sharding changes no semantics:
 same tests, same assertions, zero skips.
 
 Balancing is measured, not guessed: true per-file durations from the
-LAST run's junit records persist in ``tests/.shard_weights.json`` and
-feed a greedy longest-processing-time partition; the first run falls
-back to file size. The partition self-tunes as suites grow.
+LAST run's junit records persist in the git-ignored
+``tests/.shard_weights.local.json`` and feed a greedy
+longest-processing-time partition. Without that file the tracked
+``tests/.shard_weights.json`` seeds the partition, and files neither
+records know weigh by size. A run never rewrites the tracked file, so it
+leaves the checkout clean.
 
 Results come from each shard's junit XML (counts + per-test times), not
 stdout scraping; a shard that crashes before writing its XML fails the
@@ -38,6 +41,7 @@ import xml.etree.ElementTree as ET
 HERE = os.path.dirname(os.path.abspath(__file__))
 REPO = os.path.dirname(HERE)
 WEIGHTS = os.path.join(HERE, ".shard_weights.json")
+LOCAL_WEIGHTS = os.path.join(HERE, ".shard_weights.local.json")
 
 
 def collect_files() -> list[str]:
@@ -48,11 +52,14 @@ def collect_files() -> list[str]:
 
 
 def load_weights(files: list[str]) -> dict[str, float]:
-    try:
-        with open(WEIGHTS) as f:
-            recorded = json.load(f)
-    except (OSError, ValueError):
-        recorded = {}
+    recorded = {}
+    for path in (LOCAL_WEIGHTS, WEIGHTS):
+        try:
+            with open(path) as f:
+                recorded = json.load(f)
+            break
+        except (OSError, ValueError):
+            continue
     known = {f: recorded[f] for f in files if f in recorded}
     # Unknown files weigh by size at the known files' sec/byte rate (only
     # the relative ordering matters for the LPT partition).
@@ -174,7 +181,7 @@ def main() -> int:
     # (round-10 review finding).
     if ok and total["tests"] and not args.pytest_args:
         try:
-            with open(WEIGHTS, "w") as f:
+            with open(LOCAL_WEIGHTS, "w") as f:
                 json.dump(durations, f, indent=1, sort_keys=True)
         except OSError:
             pass

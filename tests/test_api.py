@@ -864,3 +864,127 @@ def test_fused_a_group_by_matches_unfused(spark):
         (1, sum(v for v in range(100) if v % 3 == 1)),
         (2, sum(v for v in range(100) if v % 3 == 2)),
     ]
+
+
+def test_fused_reduces_match_python_oracle(spark):
+    """count() (identity and derived keys), fold_by, mean and a sort=False
+    reduce over mixed str/int/None/tuple keys equal a pure-Python
+    Counter/dict over the same values — on the Counter kernel, on the
+    generic dict loop, through a spill threshold of 2 and across a cached()
+    barrier."""
+    import operator
+    from collections import Counter
+
+    import dampr_spark.api as api
+
+    Dampr.use_session(spark)
+    lines = [f"w{i % 13} w{i % 7} x{i % 5} w{i % 13}" for i in range(400)]
+    words = [w for line in lines for w in line.split()]
+    mixed = [
+        v
+        for i in range(300)
+        for v in (f"s{i % 11}", i % 9, None, (i % 3, None), ("t", i % 4))
+    ]
+
+    def by_key(pairs):
+        return sorted(pairs.items())
+
+    def check(max_keys):
+        old = api._FUSED_COMBINE_MAX_KEYS
+        api._FUSED_COMBINE_MAX_KEYS = max_keys
+        try:
+            split = Dampr.memory(lines, partitions=4).flat_map(str.split)
+            assert split.count().run().read() == by_key(Counter(words))
+            assert split.count(key=len).run().read() == by_key(Counter(map(len, words)))
+            pair = lambda w: (w[0], len(w))  # noqa: E731
+            assert split.count(key=pair).run().read() == by_key(Counter(map(pair, words)))
+            assert split.count(key=lambda _w: None).run().read() == [(None, len(words))]
+
+            # Mixed key types cannot be sorted: the sort=False reduce checks
+            # the shuffle's partitioning of each type, on both kernels.
+            m = Dampr.memory(mixed, partitions=4)
+            want = Counter(mixed)
+            # A key placed in two partitions would show up as two rows.
+            for vf in (api._one, lambda _v: 1):
+                rows = m.a_group_by(lambda v: v, vf).reduce(operator.add, sort=False).run().read()
+                assert len(rows) == len(want) and dict(rows) == want
+
+            nums = Dampr.memory(list(range(500)), partitions=4)
+            sums: dict = {}
+            for v in range(500):
+                sums[(v % 3, v % 2)] = sums.get((v % 3, v % 2), 0) + v
+            assert nums.fold_by(lambda v: (v % 3, v % 2), operator.add).run().read() == by_key(sums)
+            groups: dict = {}
+            for v in range(500):
+                groups.setdefault(v % 7, []).append(v)
+            means = {k: sum(vs) / len(vs) for k, vs in groups.items()}
+            assert nums.mean(key=lambda v: v % 7).run().read() == by_key(means)
+
+            cached = Dampr.memory(lines, partitions=4).flat_map(str.split).cached()
+            assert cached.count().run().read() == by_key(Counter(words))
+            assert cached.count(key=len).run().read() == by_key(Counter(map(len, words)))
+        finally:
+            api._FUSED_COMBINE_MAX_KEYS = old
+
+    check(api._FUSED_COMBINE_MAX_KEYS)
+    check(2)
+
+
+def test_count_kernel_flushes_bounded_partial_tallies():
+    """The Counter kernel flushes once a tally reaches the spill threshold:
+    with a threshold of 2 it emits more partial rows than there are keys,
+    and the partials sum to the full count."""
+    import operator
+    from collections import Counter
+
+    import dampr_spark.api as api
+
+    vals = [f"k{i % 17}" for i in range(1000)]
+    old = api._FUSED_COMBINE_MAX_KEYS
+    api._FUSED_COMBINE_MAX_KEYS = 2
+    try:
+        combine = api._fused_combiner((), api._identity, api._one, operator.add)
+    finally:
+        api._FUSED_COMBINE_MAX_KEYS = old
+    rows = list(combine((i, v) for i, v in enumerate(vals)))
+    total: Counter = Counter()
+    for k, n in rows:
+        total[k] += n
+    assert total == Counter(vals)
+    assert len(rows) > len(set(vals))
+
+
+def test_partition_hash_matches_portable_hash(monkeypatch):
+    """The fused reduce's partitioner places every key where
+    ``portable_hash`` (reduceByKey's default) would."""
+    from pyspark.rdd import portable_hash
+
+    from dampr_spark.api import _partition_hash
+
+    monkeypatch.setenv("PYTHONHASHSEED", "0")
+    for k in ("w", "", 0, -7, 2**70, True, None, (1, None), ("a", (None, 2)), 1.5, frozenset({1})):
+        assert _partition_hash(k) == portable_hash(k), k
+
+
+def test_text_byte_offset_keys(tmp_path, spark):
+    """Dampr.text keys are each line's starting byte offset — what f.tell()
+    gives before each readline — and its values are the decoded lines with
+    only '\\n' stripped, across chunk boundaries that split a multi-byte
+    character, on '\\r\\n' endings, an empty line and no trailing newline."""
+    Dampr.use_session(spark)
+    f = tmp_path / "mixed.txt"
+    f.write_bytes("héllo wörld\r\n\nnaïve ☃ snow\r\nend€".encode("utf-8"))
+    want = []
+    with open(f, "rb") as fh:
+        while True:
+            pos = fh.tell()
+            line = fh.readline()
+            if not line:
+                break
+            want.append((pos, line.decode("utf-8", "replace").rstrip("\n")))
+    assert want[0] == (0, "héllo wörld\r")
+    assert want[1] == (len("héllo wörld\r\n".encode("utf-8")), "")
+    assert want[-1][1] == "end€"
+    for chunk in (1, 2, 3, 5, 64):  # chunk 2 cuts "é" (bytes 1-2)
+        got = sorted(Dampr.text(str(f), chunk_size=chunk)._rdd.collect())
+        assert got == want, f"chunk_size={chunk}"
