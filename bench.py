@@ -521,9 +521,10 @@ def main() -> int:
     # numpy+pandas import) so pandas-UDF queries measure compute, not forks.
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
 
-    @pandas_udf(T.LongType(), PandasUDFType.SCALAR)
+    from dampr_spark.functions.udf import series_udf
+
+    @series_udf(T.LongType())
     def _noop(x):
         # Brief sleep so all warmup tasks overlap — worker reuse would
         # otherwise let a few fast workers serve every task and leave most

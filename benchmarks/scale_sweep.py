@@ -121,9 +121,10 @@ def main() -> int:
     catalog["count_total"].builder(spark, SF01).collect()
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
 
-    @pandas_udf(T.LongType(), PandasUDFType.SCALAR)
+    from dampr_spark.functions.udf import series_udf
+
+    @series_udf(T.LongType())
     def _noop(x):
         import time as _t
 

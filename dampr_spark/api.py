@@ -885,7 +885,7 @@ class PMap(PBase):
         graph too) and returns a stream of the written lines."""
         self._rdd.map(lambda kv: fmt(kv[1])).saveAsTextFile(path)
         lines = self._spark.sparkContext.textFile(path)
-        return PMap(lines.map(lambda line: (0, line)), self._spark)
+        return _Written(lines.map(lambda line: (0, line)), self._spark)
 
     def sink_tsv(self, path: str) -> "PMap":
         return self.sink(path, fmt=lambda v: "\t".join(str(x) for x in v))
@@ -899,6 +899,15 @@ class PMap(PBase):
         """Values → DataFrame; cross into Catalyst-optimized land whenever
         the remaining pipeline is relational."""
         return self._spark.createDataFrame(self._rdd.map(lambda kv: kv[1]), schema=schema)
+
+
+class _Written(PMap):
+    """The lines a sink wrote. They are already on disk, so ``run()`` hands
+    back an emitter that reads the written files on demand: no persist of
+    a read-back and no job to count it."""
+
+    def run(self, name: str | None = None) -> ValueEmitter:
+        return ValueEmitter(pairs_rdd=self._rdd)
 
 
 class PReduce(PBase):

@@ -305,6 +305,125 @@ def _checkpoint_loc(out_dir: str) -> str:
     return out_dir.rstrip("/" + os.sep) + "_checkpoint"
 
 
+def _start_batches(stream: DataFrame, handle, out_dir: str):
+    """Start ``handle`` as the ``foreachBatch`` sink of ``stream`` over all
+    currently-available input, checkpointed next to ``out_dir``. Returns
+    the started StreamingQuery (caller awaits termination)."""
+    return (
+        stream.writeStream.foreachBatch(handle)
+        .option("checkpointLocation", _checkpoint_loc(out_dir))
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+def _read_store(spark: SparkSession, path: str, schema: str) -> DataFrame:
+    """An incremental stream's on-disk store, read with its declared
+    ``schema`` (inferring it would cost a footer-reading job per batch);
+    an empty frame of that schema until the first batch creates ``path``."""
+    from pyspark.errors import AnalysisException
+
+    try:
+        return spark.read.schema(schema).parquet(path)
+    except AnalysisException:
+        return spark.createDataFrame([], schema)
+
+
+def _capped_bucket_pairs(
+    new: DataFrame,
+    store: DataFrame,
+    key: list[str],
+    cap: int,
+    carry: tuple[str, ...] = (),
+) -> DataFrame:
+    """Candidate pairs of one micro-batch of an incremental bucket sink:
+    every two distinct ids that share a ``key`` bucket, at least one of
+    them from ``new``, where the bucket's CUMULATIVE (store ∪ new) size is
+    at most ``cap`` distinct ids. Distinct ids, not rows: an at-least-once
+    retry re-appends its rows, and raw row counts would push a bucket the
+    batch operator keeps over the cap. Rows are ``(id_a < id_b, *key)``
+    plus ``<c>_a`` and ``<c>_b`` for each ``carry`` column; a retried
+    batch's pairs repeat, so the caller deduplicates.
+
+    One shuffle. Only the store rows in buckets ``new`` touches can pair,
+    so a broadcast semi-join keeps those. With ``new`` they cross a single
+    exchange clustered by ``key``, where a window ranks the distinct ids of
+    each bucket: its size is the top rank, with no second exchange and no
+    join back. The under-cap ``new`` rows then merge-join the under-cap
+    rows within the same partitions; both sides read the one exchange.
+    new × new matches keep only ``id_n < id_o``, so each within-batch pair
+    is joined once."""
+    from pyspark.sql.window import Window
+
+    cols = ["id", *key, *carry]
+    touched = store.select(*cols).join(F.broadcast(new.select(*key)), key, "left_semi")
+    bucket = Window.partitionBy(*key)
+    kept = (
+        touched.withColumn("_new", F.lit(False))
+        .unionByName(new.select(*cols).withColumn("_new", F.lit(True)))
+        .filter(F.col("id").isNotNull())
+        .withColumn("_r", F.dense_rank().over(bucket.orderBy("id")))
+        .withColumn("_n", F.max("_r").over(bucket))
+        .filter(F.col("_n") <= cap)
+    )
+
+    def side(df: DataFrame, s: str) -> DataFrame:
+        return df.select(
+            F.col("id").alias(f"id_{s}"),
+            *key,
+            *[F.col(c).alias(f"{c}_{s}") for c in carry],
+            F.col("_new").alias(f"_new_{s}"),
+        )
+
+    low = F.col("id_n") < F.col("id_o")
+    return (
+        side(kept.filter("_new"), "n")
+        # both sides are already clustered by key on the one exchange; a
+        # broadcast of this side would cost one more job per batch
+        .hint("merge")
+        .join(side(kept, "o"), key)
+        # every new row meets its own copy, and a RETRIED batch re-delivers
+        # ids already in the store: the self-match would fabricate an
+        # (X, X) pair that distinct-on-read cannot remove. Reading _new_o
+        # also keeps _new in both copies of the exchange, which its reuse
+        # needs (a pruned column makes the copies differ).
+        .filter((F.col("id_n") != F.col("id_o")) & (low | ~F.col("_new_o")))
+        .select(
+            F.least("id_n", "id_o").alias("id_a"),
+            F.greatest("id_n", "id_o").alias("id_b"),
+            *key,
+            *[
+                F.when(low, F.col(f"{c}_{x}")).otherwise(F.col(f"{c}_{y}")).alias(f"{c}_{ab}")
+                for c in carry
+                for ab, x, y in (("a", "n", "o"), ("b", "o", "n"))
+            ],
+        )
+    )
+
+
+def _bucket_pair_step(
+    new: DataFrame,
+    store_dir: str,
+    schema: str,
+    out_dir: str,
+    key: list[str],
+    cap: int,
+    emit=lambda pairs: pairs,
+) -> None:
+    """The store step of an incremental bucket-pair sink: pin the batch's
+    store rows ``new`` once, append ``emit(pairs).distinct()`` of
+    :func:`_capped_bucket_pairs` against the store to ``out_dir``, then
+    append ``new`` to the store. The store columns are ``schema``'s; the
+    only carried column is whatever of them is not ``id`` or ``key``."""
+    new = new.localCheckpoint(eager=True)  # feeds the pair plan and the append
+    store = _read_store(new.sparkSession, store_dir, schema)
+    carry = tuple(c for c in store.columns if c != "id" and c not in key)
+    emit(_capped_bucket_pairs(new, store, key, cap, carry)).distinct().write.mode(
+        "append"
+    ).parquet(out_dir)
+    new.select(*store.columns).write.mode("append").parquet(store_dir)
+
+
 def run_to_memory(stream_df: DataFrame, name: str, mode: str = "complete") -> DataFrame:
     """Execute a streaming query to completion over all currently-available
     input (``availableNow``) into an in-memory table; returns the result as
@@ -346,17 +465,12 @@ def incremental_dedup_stream(
 
     Returns the started StreamingQuery (caller awaits termination).
     """
-    from pyspark.errors import AnalysisException
-
     from dampr_spark.functions.text import fingerprint
     from dampr_spark.operators.dedup import drop_seen_exact
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        try:
-            hist = spark.read.parquet(history_dir)
-        except AnalysisException:
-            hist = spark.createDataFrame([], "fp string")
+        hist = _read_store(spark, history_dir, "fp string")
         # Persist the survivors: two writes consume them, and without the
         # pin the whole anti-join + min-id plan would execute twice — with
         # the second run re-reading history_dir WHILE appending to it.
@@ -369,12 +483,7 @@ def incremental_dedup_stream(
         finally:
             kept.unpersist()
 
-    return (
-        docs_stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", _checkpoint_loc(out_dir))
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_batches(docs_stream, handle, out_dir)
 
 
 def user_value_ewma_stream(events: DataFrame) -> DataFrame:
@@ -438,6 +547,9 @@ def streaming_dedup_within_watermark(
     return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(keys)
 
 
+_NEARDUP_STORE = "id long, band int, band_hash long"
+
+
 def incremental_neardup_stream(
     docs_stream: DataFrame,
     store_dir: str,
@@ -478,87 +590,27 @@ def incremental_neardup_stream(
     Emitted pairs are CANDIDATES; the exact-Jaccard verify joins document
     text downstream (the store deliberately holds signatures, not text).
 
+    Each batch is one store step (:func:`_bucket_pair_step`), 5 Spark
+    jobs: the batch's signatures are pinned once; one pair plan reads the
+    store with its declared schema, keeps the store rows in buckets the
+    batch touches (a broadcast semi-join), sends them and the batch's
+    rows through a single shuffle clustered by (band, band_hash), sizes
+    each bucket there in distinct ids, and merge-joins the batch's
+    under-cap rows with all under-cap rows, which gives the cross-store
+    and within-batch pairs together; then the signatures are appended.
+
     Same at-least-once caveat as incremental_dedup_stream: a retried batch
     re-appends signatures and pairs; dedup on read restores exactly-once.
     """
-    from pyspark.errors import AnalysisException
-
     from dampr_spark.operators.dedup import _banded_signatures
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        new_bands = _banded_signatures(
-            batch_df, text_col, id_col, num_perm, bands, shingle_k
-        ).localCheckpoint(eager=True)
-        try:
-            store = spark.read.parquet(store_dir)
-        except AnalysisException:
-            store = spark.createDataFrame([], "id long, band int, band_hash long")
-        # Cumulative bucket sizes (history + this batch): a bucket over the
-        # cap is excluded from BOTH pairings — matching the batch
-        # operator's total-size semantics as closely as an incremental
-        # (no-retraction) operator can; see docstring for the exact
-        # superset guarantee.
-        # countDistinct, not count: an at-least-once RETRY re-appends its
-        # signature rows, and raw row counts would inflate bucket sizes past
-        # the cap for buckets the batch operator keeps. Distinct ids are
-        # retry-invariant (same fix as the semantic sink's cell counts).
-        hot = (
-            store.select("id", "band", "band_hash")
-            .unionByName(new_bands.select("id", "band", "band_hash"))
-            .groupBy("band", "band_hash")
-            .agg(F.countDistinct("id").alias("_bsz"))
-            .filter(F.col("_bsz") > max_bucket)
-            .select("band", "band_hash")
-        )
-        store_pruned = store.join(hot, ["band", "band_hash"], "left_anti")
-        new_pruned = new_bands.join(
-            hot, ["band", "band_hash"], "left_anti"
-        ).localCheckpoint(eager=True)
-        # Pairs carry their EMITTING bucket (band, band_hash): the sink is
-        # append-only, so a bucket that goes hot in a later batch can't
-        # retract its early pairs here — :func:`neardup_pairs_view` does
-        # that at read time by dropping pairs whose every recorded bucket
-        # has since crossed the cap, which makes the read view EXACTLY the
-        # batch operator's capped candidate set.
-        cross = (
-            new_pruned.select(F.col("id").alias("id_a"), "band", "band_hash")
-            .join(
-                store_pruned.select(F.col("id").alias("id_b"), "band", "band_hash"),
-                ["band", "band_hash"],
-            )
-            # a RETRIED batch re-delivers docs already in the store: the
-            # self-match would fabricate an (X, X) pair no legitimate row
-            # duplicates, so distinct-on-read could never remove it
-            .filter(F.col("id_a") != F.col("id_b"))
-            .select(
-                F.least("id_a", "id_b").alias("id_a"),
-                F.greatest("id_a", "id_b").alias("id_b"),
-                "band",
-                "band_hash",
-            )
-        )
-        within = (
-            new_pruned.select(F.col("id").alias("id_a"), "band", "band_hash")
-            .join(
-                new_pruned.select(F.col("id").alias("id_b"), "band", "band_hash"),
-                ["band", "band_hash"],
-            )
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b", "band", "band_hash")
-        )
-        pairs = cross.unionByName(within).distinct()
-        pairs.write.mode("append").parquet(out_dir)
-        new_bands.select("id", "band", "band_hash").write.mode("append").parquet(
-            store_dir
+        new = _banded_signatures(batch_df, text_col, id_col, num_perm, bands, shingle_k)
+        _bucket_pair_step(
+            new, store_dir, _NEARDUP_STORE, out_dir, ["band", "band_hash"], max_bucket
         )
 
-    return (
-        docs_stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", _checkpoint_loc(out_dir))
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_batches(docs_stream, handle, out_dir)
 
 
 def neardup_pairs_view(
@@ -584,23 +636,33 @@ def neardup_pairs_view(
     anti-join, so keeping such rows would silently exempt them from
     retraction — under-reporting is the conservative failure for a capped
     candidate view."""
-    pairs = spark.read.parquet(out_dir).filter(
-        F.col("band").isNotNull() & F.col("band_hash").isNotNull()
+    return _capped_pairs_view(
+        spark, out_dir, store_dir, ["band", "band_hash"], max_bucket, ["id_a", "id_b"]
     )
-    # countDistinct for retry-invariance: see incremental_neardup_stream's
-    # hot check.
+
+
+def _capped_pairs_view(
+    spark: SparkSession,
+    out_dir: str,
+    store_dir: str,
+    key: list[str],
+    cap: int,
+    cols: list[str],
+) -> DataFrame:
+    """Distinct ``cols`` of the pair rows in ``out_dir`` whose emitting
+    ``key`` bucket holds at most ``cap`` distinct ids in the store at
+    ``store_dir`` — the read-time retraction of both bucket sinks. Rows
+    with a null ``key`` column are dropped. countDistinct, not count, for
+    the store step's reason: re-appended rows of a retried batch must not
+    push a bucket the batch operator keeps over the cap."""
+    pairs = spark.read.parquet(out_dir).dropna(subset=key)
     hot = (
         spark.read.parquet(store_dir)
-        .groupBy("band", "band_hash")
-        .agg(F.countDistinct("id").alias("_bsz"))
-        .filter(F.col("_bsz") > max_bucket)
-        .select("band", "band_hash")
+        .groupBy(*key)
+        .agg(F.countDistinct("id").alias("_n"))
+        .filter(F.col("_n") > cap)
     )
-    return (
-        pairs.join(hot, ["band", "band_hash"], "left_anti")
-        .select("id_a", "id_b")
-        .distinct()
-    )
+    return pairs.join(hot, key, "left_anti").select(*cols).distinct()
 
 
 def incremental_novelty_stream(
@@ -635,8 +697,6 @@ def incremental_novelty_stream(
     strings cuts the store ~8x at a documented collision risk of
     n_grams^2 / 2^65. Same at-least-once caveat as the dedup streams: a
     retried batch re-appends; dedup on read restores exactly-once."""
-    from pyspark.errors import AnalysisException
-
     from dampr_spark.operators.dedup import word_ngrams
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
@@ -649,10 +709,7 @@ def incremental_novelty_stream(
             )
             .localCheckpoint(eager=True)  # feeds firsts, the join, and the agg
         )
-        try:
-            store = spark.read.parquet(store_dir)
-        except AnalysisException:
-            store = spark.createDataFrame([], "gram string")
+        store = _read_store(spark, store_dir, "gram string")
         new_grams = (
             d.groupBy("gram")
             .agg(F.min("doc_id").alias("first_doc"))
@@ -679,12 +736,7 @@ def incremental_novelty_stream(
         out.write.mode("append").parquet(out_dir)
         new_grams.select("gram").write.mode("append").parquet(store_dir)
 
-    return (
-        docs_stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", _checkpoint_loc(out_dir))
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_batches(docs_stream, handle, out_dir)
 
 
 def fit_value_histogram(
@@ -777,12 +829,7 @@ def value_drift_stream(
             "batch_id long, n_events long, psi double",
         ).write.mode("append").parquet(out_dir)
 
-    return (
-        events_stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", _checkpoint_loc(out_dir))
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_batches(events_stream, handle, out_dir)
 
 
 def fit_embedding_cell_histogram(
@@ -870,12 +917,7 @@ def embedding_drift_stream(
             "batch_id long, n_vectors long, n_cells long, psi double",
         ).write.mode("append").parquet(out_dir)
 
-    return (
-        vec_stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", _checkpoint_loc(out_dir))
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_batches(vec_stream, handle, out_dir)
 
 
 def semantic_dedup_stream(
@@ -980,12 +1022,7 @@ def semantic_dedup_stream(
         else:
             ivf.init_store(batch, store_dir, vec_col=vec_col)
 
-    return (
-        vec_stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", _checkpoint_loc(out_dir))
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_batches(vec_stream, handle, out_dir)
 
 
 def semantic_dedup_retractions(
@@ -1077,8 +1114,6 @@ def incremental_substring_stream(
             "runs are detected at anchor granularity (same contract as the "
             "batch operator)"
         )
-    from pyspark.errors import AnalysisException
-
     from dampr_spark.operators.dedup import (
         positional_anchor_rows,
         spans_from_anchor_pairs,
@@ -1089,10 +1124,7 @@ def incremental_substring_stream(
         new_pos = positional_anchor_rows(
             batch_df, text_col, id_col, anchor_tokens, hash_anchors=True
         ).localCheckpoint(eager=True)
-        try:
-            store = spark.read.parquet(store_dir)
-        except AnalysisException:
-            store = spark.createDataFrame([], "id long, pos int, gram long")
+        store = _read_store(spark, store_dir, "id long, pos int, gram long")
         hot = (
             store.select("gram")
             .unionByName(new_pos.select("gram"))
@@ -1157,12 +1189,7 @@ def incremental_substring_stream(
         spans.write.mode("append").parquet(out_dir)
         new_pos.write.mode("append").parquet(store_dir)
 
-    return (
-        docs_stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", _checkpoint_loc(out_dir))
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_batches(docs_stream, handle, out_dir)
 
 
 def cms_stream(
@@ -1192,12 +1219,7 @@ def cms_stream(
             "append"
         ).parquet(out_dir)
 
-    return (
-        docs_stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", _checkpoint_loc(out_dir))
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_batches(docs_stream, handle, out_dir)
 
 
 def cms_view(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -1237,12 +1259,7 @@ def dsir_score_stream(
             n_buckets=n_buckets,
         ).write.mode("append").parquet(out_dir)
 
-    return (
-        docs_stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", _checkpoint_loc(out_dir))
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_batches(docs_stream, handle, out_dir)
 
 
 def scd2_state_stream(
@@ -1291,12 +1308,7 @@ def scd2_state_stream(
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         _scd2_apply_batch(batch_df, batch_id, open_dir, out_dir)
 
-    return (
-        events_stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", _checkpoint_loc(out_dir))
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_batches(events_stream, handle, out_dir)
 
 
 def _scd2_apply_batch(
@@ -1409,12 +1421,7 @@ def hll_stream(
             out_dir
         )
 
-    return (
-        events_stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", _checkpoint_loc(out_dir))
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_batches(events_stream, handle, out_dir)
 
 
 def hll_view(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -1455,12 +1462,7 @@ def bloom_stream(
             items, items.columns[0], n_hashes=n_hashes, n_bits=n_bits
         ).write.mode("append").parquet(out_dir)
 
-    return (
-        events_stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", _checkpoint_loc(out_dir))
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_batches(events_stream, handle, out_dir)
 
 
 def bloom_view(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -1497,12 +1499,7 @@ def histogram_stream(
             out_dir
         )
 
-    return (
-        events_stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", _checkpoint_loc(out_dir))
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_batches(events_stream, handle, out_dir)
 
 
 def histogram_view(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -1555,12 +1552,7 @@ def ols_stream(
             .parquet(out_dir)
         )
 
-    return (
-        events_stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", _checkpoint_loc(out_dir))
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_batches(events_stream, handle, out_dir)
 
 
 def ols_view(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -1631,12 +1623,10 @@ def logreg_score_stream(
             (z > 0).alias("keep"),
         ).write.mode("append").parquet(out_dir)
 
-    return (
-        docs_stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", _checkpoint_loc(out_dir))
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_batches(docs_stream, handle, out_dir)
+
+
+_SEMANTIC_STORE = "id long, cell long, e array<double>"
 
 
 def semantic_neardup_stream(
@@ -1674,85 +1664,28 @@ def semantic_neardup_stream(
     batch side; store SQ8 codes instead of e (ScalarQuantizer) when the
     store's footprint matters more than exact-cosine streaming scores.
 
+    Each batch is the same single store step as the LSH sink's
+    (:func:`_bucket_pair_step`), keyed by cell and carrying ``e`` through
+    the pair join so the cosine is scored on the pair rows.
+
     Same at-least-once caveat as the other incremental sinks: a retried
     batch re-appends; the (id_a < id_b, same deterministic cos_sim) rows
     dedup on read."""
-    from pyspark.errors import AnalysisException
-
     from dampr_spark.operators.similarity import grid_cells
     from dampr_spark.functions.vector import cosine
 
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        new_cells = grid_cells(
-            batch_df, vec_col, id_col, dims, buckets, bounds
-        ).localCheckpoint(eager=True)
-        try:
-            store = spark.read.parquet(store_dir)
-        except AnalysisException:
-            store = spark.createDataFrame(
-                [], "id long, cell long, e array<double>"
-            )
-        # countDistinct, not count: an at-least-once RETRY re-appends its
-        # (id, cell, e) rows to the store, and raw row counts would inflate
-        # the cell size past the cap for cells the batch operator keeps —
-        # breaking the view's exact batch equivalence. Distinct ids are
-        # retry-invariant.
-        hot = (
-            store.select("id", "cell")
-            .unionByName(new_cells.select("id", "cell"))
-            .groupBy("cell")
-            .agg(F.countDistinct("id").alias("_csz"))
-            .filter(F.col("_csz") > max_cell)
-            .select("cell")
-        )
-        store_ok = store.join(hot, "cell", "left_anti")
-        new_ok = new_cells.join(hot, "cell", "left_anti").localCheckpoint(eager=True)
-        cross = (
-            new_ok.select(F.col("id").alias("id_a"), F.col("e").alias("ea"), "cell")
-            .join(
-                store_ok.select(
-                    F.col("id").alias("id_b"), F.col("e").alias("eb"), "cell"
-                ),
-                "cell",
-            )
-            # a RETRIED batch re-delivers vectors already in the store
-            .filter(F.col("id_a") != F.col("id_b"))
-            .select(
-                F.least("id_a", "id_b").alias("id_a"),
-                F.greatest("id_a", "id_b").alias("id_b"),
-                # ea/eb may swap with the id ordering; cosine is symmetric
-                F.round(cosine("ea", "eb"), 6).alias("cos_sim"),
-                "cell",
-            )
-        )
-        within = (
-            new_ok.select(F.col("id").alias("id_a"), F.col("e").alias("ea"), "cell")
-            .join(
-                new_ok.select(
-                    F.col("id").alias("id_b"), F.col("e").alias("eb"), "cell"
-                ),
-                "cell",
-            )
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select(
-                "id_a", "id_b", F.round(cosine("ea", "eb"), 6).alias("cos_sim"), "cell"
-            )
-        )
-        pairs = (
-            cross.unionByName(within)
-            .filter(F.col("cos_sim") >= tau)
-            .distinct()
-        )
-        pairs.write.mode("append").parquet(out_dir)
-        new_cells.select("id", "cell", "e").write.mode("append").parquet(store_dir)
+    def scored(pairs: DataFrame) -> DataFrame:
+        return pairs.select(
+            "id_a", "id_b", F.round(cosine("e_a", "e_b"), 6).alias("cos_sim"), "cell"
+        ).filter(F.col("cos_sim") >= tau)
 
-    return (
-        vec_stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", _checkpoint_loc(out_dir))
-        .trigger(availableNow=True)
-        .start()
-    )
+    def handle(batch_df: DataFrame, batch_id: int) -> None:
+        new = grid_cells(batch_df, vec_col, id_col, dims, buckets, bounds)
+        _bucket_pair_step(
+            new, store_dir, _SEMANTIC_STORE, out_dir, ["cell"], max_cell, scored
+        )
+
+    return _start_batches(vec_stream, handle, out_dir)
 
 
 def semantic_pairs_view(
@@ -1769,19 +1702,6 @@ def semantic_pairs_view(
     ``semantic_grid_pairs(corpus, bounds=..., max_cell=...)`` over the
     ingested corpus (pinned by the equivalence test); scores need no
     re-verification because they are exact cosines already."""
-    pairs = spark.read.parquet(out_dir).filter(F.col("cell").isNotNull())
-    # countDistinct for the same retry-invariance reason as the sink's
-    # in-handle hot check: re-appended rows must not push a cell the batch
-    # operator keeps over the cap.
-    hot = (
-        spark.read.parquet(store_dir)
-        .groupBy("cell")
-        .agg(F.countDistinct("id").alias("_csz"))
-        .filter(F.col("_csz") > max_cell)
-        .select("cell")
-    )
-    return (
-        pairs.join(hot, "cell", "left_anti")
-        .select("id_a", "id_b", "cos_sim")
-        .distinct()
+    return _capped_pairs_view(
+        spark, out_dir, store_dir, ["cell"], max_cell, ["id_a", "id_b", "cos_sim"]
     )

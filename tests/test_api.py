@@ -360,6 +360,25 @@ def test_sink_json(items, tmp_path):
     assert sorted(json.loads(x)["v"] for x in lines.run()) == list(range(10, 20))
 
 
+def test_sink_run_reads_written_files(spark, items, tmp_path):
+    """``run()`` on a sink's lines reads the written files on demand: it
+    persists nothing and runs no job beyond the write itself."""
+    out = str(tmp_path / "sunk_tsv")
+    sc = spark.sparkContext
+    before = set(dict(sc._jsc.getPersistentRDDs()))
+    sc.setJobGroup("sink_run", "sink then run")
+    try:
+        lines = items.map(lambda x: (x, x * 2)).sink_tsv(out).run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("sink_run")) == 1
+    assert set(dict(sc._jsc.getPersistentRDDs())) == before
+    want = sorted(f"{x}\t{x * 2}" for x in range(10, 20))
+    assert sorted(lines.read()) == want
+    assert len(lines.read(3)) == 3
+    assert sorted(lines) == want
+
+
 def test_cached_and_shared(items):
     # test_dampr.py:198-209: checkpoint/cached shares a computed subgraph
     base = items.map(lambda x: x * 2).cached()

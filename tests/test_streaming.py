@@ -577,6 +577,165 @@ def test_incremental_neardup_stream_cap_superset_of_batch(
     )
 
 
+def _write_doc_batches(in_dir: str, batches) -> None:
+    """One parquet file per micro-batch of ``(doc_id, text)`` rows, named so
+    the file source reads them in order."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    os.makedirs(in_dir, exist_ok=True)
+    for i, rows in enumerate(batches):
+        pq.write_table(
+            pa.table(
+                {
+                    "doc_id": pa.array([r[0] for r in rows], pa.int64()),
+                    "text": pa.array([r[1] for r in rows], pa.string()),
+                }
+            ),
+            f"{in_dir}/b{i:03d}.parquet",
+        )
+
+
+def _neardup_replay(spark, in_dir: str, store: str, out: str, **kw):
+    """Run incremental_neardup_stream over every file now in ``in_dir``
+    (one file a trigger) to completion; returns the finished query."""
+    stream = (
+        spark.readStream.schema("doc_id long, text string")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(in_dir)
+    )
+    q = streaming.incremental_neardup_stream(stream, store, out, **kw)
+    q.awaitTermination()
+    return q
+
+
+def _words_doc(seed: int, n: int = 40) -> str:
+    import random
+
+    rng = random.Random(seed)
+    return " ".join(
+        "".join(rng.choice("abcdefghijklmnopqrstuvwxyz") for _ in range(rng.randint(3, 9)))
+        for _ in range(n)
+    )
+
+
+def test_incremental_neardup_stream_jobs_per_batch(spark, sf_dir, tmp_path_factory):
+    """Each micro-batch after the first is one store step: pin the batch's
+    signatures, one pair plan over a single shuffle (with its broadcast),
+    and the two appends — 5 Spark jobs. Jobs are keyed by batch the way
+    Spark labels them: the query's run id is their job group and
+    ``batch = N`` is in each description."""
+    import re
+
+    from dampr_spark.sources.readers import read_table
+
+    base = tmp_path_factory.mktemp("neardup_jobs")
+    in_dir, store, out = (str(base / d) for d in ("in", "store", "out"))
+    rows = [
+        (r.doc_id, r.text)
+        for r in read_table(spark, sf_dir, "documents").select("doc_id", "text").collect()
+    ]
+    _write_doc_batches(in_dir, [rows[i::3] for i in range(3)])
+    q = _neardup_replay(spark, in_dir, store, out, max_bucket=3)
+
+    sc = spark.sparkContext
+    status = sc._jsc.sc().statusStore()
+    by_batch: dict[int, int] = {}
+    for j in sc.statusTracker().getJobIdsForGroup(str(q.runId)):
+        desc = status.job(j).description()
+        m = re.search(r"batch = (\d+)", desc.get()) if desc.isDefined() else None
+        if m:
+            by_batch[int(m.group(1))] = by_batch.get(int(m.group(1)), 0) + 1
+    assert sorted(by_batch) == [0, 1, 2], by_batch
+    assert all(by_batch[b] <= 5 for b in (1, 2)), by_batch
+
+
+def test_incremental_neardup_stream_bucket_crosses_cap_in_batch(
+    spark, tmp_path_factory
+):
+    """A bucket that is under ``max_bucket`` in the store but over it once
+    the current batch is counted: that batch emits no pair from it, and
+    ``neardup_pairs_view`` retracts the pair it emitted while under the cap,
+    so the view equals the batch operator's capped set."""
+    from dampr_spark.operators.dedup import minhash_lsh_candidates
+
+    base = tmp_path_factory.mktemp("neardup_cross_cap")
+    in_dir, store, out = (str(base / d) for d in ("in", "store", "out"))
+    cap = 3
+    family = _words_doc(1)  # identical texts share all 16 band buckets
+    twin = _words_doc(2)
+    b0 = [(1, family), (2, family)] + [(10 + i, _words_doc(10 + i)) for i in range(4)]
+    b1 = [(3, family), (4, family), (20, twin), (21, twin)]
+    b1 += [(30 + i, _words_doc(30 + i)) for i in range(4)]
+
+    def family_rows() -> int:
+        return (
+            spark.read.parquet(out)
+            .filter(F.col("id_a").isin(1, 2, 3, 4) | F.col("id_b").isin(1, 2, 3, 4))
+            .count()
+        )
+
+    # Batch 0 alone: the family bucket holds 2 <= cap ids and pairs.
+    _write_doc_batches(in_dir, [b0])
+    _neardup_replay(spark, in_dir, store, out, max_bucket=cap)
+    assert family_rows() == 16  # (1, 2) from each of the 16 shared bands
+    # Batch 1 takes the family to 4 > cap ids: no family pair is emitted.
+    _write_doc_batches(in_dir, [b0, b1])
+    _neardup_replay(spark, in_dir, store, out, max_bucket=cap)
+    assert family_rows() == 16
+    got = {(r.id_a, r.id_b) for r in spark.read.parquet(out).collect()}
+    assert (20, 21) in got and (3, 4) not in got
+
+    docs = spark.createDataFrame(b0 + b1, "doc_id long, text string")
+    want = {
+        (r.id_a, r.id_b)
+        for r in minhash_lsh_candidates(docs, max_bucket=cap).collect()
+    }
+    view = {
+        (r.id_a, r.id_b)
+        for r in streaming.neardup_pairs_view(spark, out, store, max_bucket=cap).collect()
+    }
+    assert (20, 21) in want and (1, 2) not in want
+    assert view == want, f"extra={view - want} missing={want - view}"
+
+
+def test_incremental_neardup_stream_redelivered_batch(spark, tmp_path_factory):
+    """An at-least-once retry re-delivers rows whose signatures are already
+    in the store, here alongside new documents: no (X, X) self-pair may
+    come out, and bucket sizes count distinct ids, so the re-delivered
+    rows do not push a bucket of ``cap`` documents over the cap in the
+    batch where its pairs are first emitted."""
+    from dampr_spark.operators.dedup import minhash_lsh_candidates
+
+    base = tmp_path_factory.mktemp("neardup_redelivered")
+    in_dir, store, out = (str(base / d) for d in ("in", "store", "out"))
+    cap = 3
+    family = _words_doc(3)
+    b0 = [(1, family)] + [(10 + i, _words_doc(40 + i)) for i in range(4)]
+    b1 = b0 + [(2, family), (3, family)]
+    _write_doc_batches(in_dir, [b0, b1])
+    _neardup_replay(spark, in_dir, store, out, max_bucket=cap)
+
+    pairs = spark.read.parquet(out)
+    assert pairs.filter(F.col("id_a") == F.col("id_b")).count() == 0
+    got = {(r.id_a, r.id_b) for r in pairs.collect()}
+    want = {
+        (r.id_a, r.id_b)
+        for r in minhash_lsh_candidates(
+            spark.createDataFrame(b1, "doc_id long, text string"), max_bucket=cap
+        ).collect()
+    }
+    assert {(1, 2), (1, 3), (2, 3)} <= want
+    assert got == want, f"extra={got - want} missing={want - got}"
+    view = {
+        (r.id_a, r.id_b)
+        for r in streaming.neardup_pairs_view(spark, out, store, max_bucket=cap).collect()
+    }
+    assert view == want
+
+
 def test_incremental_novelty_stream_matches_batch(spark, sf_dir, tmp_path_factory):
     """Replay the documents table in two doc_id-ORDERED micro-batches: the
     union of per-doc novelty rows must equal the batch `ngram_novelty`
