@@ -23,6 +23,7 @@ from pyspark.sql.window import Window
 
 from dampr_spark.functions.vector import cosine, valid_vector, dot
 from dampr_spark.functions.udf import series_udf
+from dampr_spark.operators.dedup import _bucket_pairs, _ensure_parallelism
 from dampr_spark.operators.graph import _round_half_up
 from dampr_spark.operators.pinning import pin_once as _pin_once
 
@@ -1626,25 +1627,18 @@ class RandomHyperplaneLSH:
         SemDeDup-style semantic dedup (examples/semantic_dedup.py): buckets
         shrink by ~|clusters| and every cluster's pair generation proceeds
         as an independent parallel unit."""
-        b = self.bucketize(df, vec_col, id_col, extra_keys=extra_keys)
-        grouped = b.groupBy("table", "bucket", *extra_keys).agg(
-            F.collect_list(F.struct(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))).alias("docs")
+        b = self.bucketize(df, vec_col, id_col, extra_keys=extra_keys).select(
+            F.col(id_col).alias("id"), F.col(vec_col).alias("v"),
+            "table", "bucket", *extra_keys,
         )
-        # Shared bind-once pair expression (round 14): the inline shape
-        # captured array_sort(docs) in the lambda body and re-sorted the
-        # bucket per element — with full VECTORS inside the structs, each
-        # re-sort paid O(B·dim) comparisons B times per bucket. See
-        # dedup._sorted_struct_pairs.
-        from dampr_spark.operators.dedup import _sorted_struct_pairs
-
-        pairs_expr = _sorted_struct_pairs(F.col("docs"))
         return (
-            grouped.filter((F.size("docs") >= 2) & (F.size("docs") <= max_bucket))
-            .select(F.explode(pairs_expr).alias("p"))
+            _bucket_pairs(
+                b, ["table", "bucket", *extra_keys], ["v"], max_bucket=max_bucket
+            )
             .select(
-                F.col("p.a.id").alias("id_a"),
-                F.col("p.b.id").alias("id_b"),
-                F.round(cosine(F.col("p.a.v"), F.col("p.b.v")), 6).alias("cos_sim"),
+                F.col("a.id").alias("id_a"),
+                F.col("b.id").alias("id_b"),
+                F.round(cosine(F.col("a.v"), F.col("b.v")), 6).alias("cos_sim"),
             )
             .distinct()
             .filter(F.col("cos_sim") >= threshold)
@@ -2256,25 +2250,25 @@ def semantic_grid_pairs(
     when recall must be tunable).
 
     Plan shape for 100 TB: only (id, cell, vector) shuffles on the cell
-    key; in-cell pair expansion is capped at max_cell^2/2 per cell; the
-    cosine is a JVM expression on the joined rows — no UDF, no cartesian.
+    key, collecting each cell's members; in-cell pairs explode in the
+    cell's row (:func:`dedup._bucket_pairs`), capped at max_cell^2/2 per
+    cell; the cosine is a JVM expression on the pair rows — no UDF, no
+    keyed join, no cartesian (the only join is the 1-row grid-bound
+    broadcast), and building the frame runs no job. A small input hashes
+    on the cell into one partition per core first, so the cosine stage
+    is not coalesced to one task (see ``fuzzy_prefix_pairs``).
     """
-    cells = grid_cells(df, vec_col, id_col, dims, buckets, bounds).localCheckpoint(
-        eager=True
+    cells = _ensure_parallelism(
+        grid_cells(df, vec_col, id_col, dims, buckets, bounds), "cell"
     )
-    ok = (
-        cells.groupBy("cell")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter((F.col("n") >= 2) & (F.col("n") <= max_cell))
-        .select("cell")
-    )
-    blocked = cells.join(F.broadcast(ok), "cell")
-    a = blocked.select(F.col("cell"), F.col("id").alias("id_a"), F.col("e").alias("ea"))
-    b = blocked.select(F.col("cell"), F.col("id").alias("id_b"), F.col("e").alias("eb"))
     return (
-        a.join(b, "cell")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", F.round(cosine("ea", "eb"), 6).alias("cos_sim"))
+        _bucket_pairs(cells, ["cell"], ["e"], max_bucket=max_cell)
+        .filter(F.col("a.id") < F.col("b.id"))
+        .select(
+            F.col("a.id").alias("id_a"),
+            F.col("b.id").alias("id_b"),
+            F.round(cosine(F.col("a.e"), F.col("b.e")), 6).alias("cos_sim"),
+        )
         .filter(F.col("cos_sim") >= tau)
     )
 

@@ -320,13 +320,13 @@ def _start_batches(stream: DataFrame, handle, out_dir: str):
 def _read_store(spark: SparkSession, path: str, schema: str) -> DataFrame:
     """An incremental stream's on-disk store, read with its declared
     ``schema`` (inferring it would cost a footer-reading job per batch);
-    an empty frame of that schema until the first batch creates ``path``."""
-    from pyspark.errors import AnalysisException
-
-    try:
+    an empty frame of that schema until the first batch creates ``path``.
+    Existence is asked of the path's Hadoop FileSystem: reading a missing
+    path logs a FileNotFoundException stack trace before it raises."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    if hpath.getFileSystem(spark._jsc.hadoopConfiguration()).exists(hpath):
         return spark.read.schema(schema).parquet(path)
-    except AnalysisException:
-        return spark.createDataFrame([], schema)
+    return spark.createDataFrame([], schema)
 
 
 def _capped_bucket_pairs(
@@ -1320,17 +1320,13 @@ def _scd2_apply_batch(
     import os
     import shutil
 
-    from pyspark.errors import AnalysisException
     from pyspark.sql.window import Window
 
     from dampr_spark.plans.eventops import state_runs
 
     spark = batch_df.sparkSession
     runs = state_runs(batch_df.select("user_id", "event_type", "ts", "event_id"))
-    try:
-        open_ = spark.read.parquet(f"{open_dir}/v={batch_id - 1}")
-    except AnalysisException:
-        open_ = spark.createDataFrame([], _SCD2_OPEN_SCHEMA)
+    open_ = _read_store(spark, f"{open_dir}/v={batch_id - 1}", _SCD2_OPEN_SCHEMA)
     combined = open_.unionByName(runs)
     w_u = Window.partitionBy("user_id").orderBy("valid_from", "first_eid")
     w_s = Window.partitionBy("user_id", "state").orderBy("valid_from", "first_eid")

@@ -652,20 +652,17 @@ def test_semantic_grid_blocking_broadcast_fit_no_sortmerge(spark):
 
 
 def test_semantic_grid_pairs_cell_keyed_no_cartesian(spark):
-    """The pair stage joins ONLY on the cell key (the in-cell self-join may
-    sort-merge or hash — both are the blocked, capped shape); what must
-    never appear is an unkeyed product over the corpus. At test scale a
-    keyless product plans as BroadcastNestedLoopJoin (auto-broadcast), not
-    CartesianProduct — and the correct plan contains NO BNLJ (the grid-fit
-    BNLJ is truncated behind the eager localCheckpoint), so asserting both
-    absent catches the crossJoin regression at any scale. The keyed-join
-    SHAPE is what this locks; the ok-cell broadcast hint itself is
-    size-satisfied at sf0.001 and not lockable from the executed plan."""
+    """The pair stage is keyed by the cell: members collect per cell and
+    pair inside the cell's row, with no join at all. What must never
+    appear is an unkeyed product over the corpus. At test scale a keyless
+    product plans as BroadcastNestedLoopJoin (auto-broadcast), not
+    CartesianProduct. The correct plan holds exactly ONE BNLJ — the
+    1-row grid-bound fit crossJoined onto every vector — so a crossJoin
+    pair stage (a second BNLJ, or a CartesianProduct at scale) fails."""
     from dampr_spark.operators.similarity import semantic_grid_pairs
     from dampr_spark.sources.readers import read_table
 
     df = semantic_grid_pairs(read_table(spark, SF, "embeddings"))
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "BroadcastHashJoin" in plan  # the keyed joins broadcast-build
+    assert plan.count("BroadcastNestedLoopJoin") == 1
