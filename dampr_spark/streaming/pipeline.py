@@ -329,6 +329,12 @@ def _read_store(spark: SparkSession, path: str, schema: str) -> DataFrame:
     return spark.createDataFrame([], schema)
 
 
+def _check_cap(knob: str, cap: int) -> None:
+    """Refuse a cap below 1 at call time: every batch would emit no pair."""
+    if cap < 1:
+        raise ValueError(f"{knob}={cap} must be >= 1 (rows per bucket)")
+
+
 def _capped_bucket_pairs(
     new: DataFrame,
     store: DataFrame,
@@ -336,20 +342,23 @@ def _capped_bucket_pairs(
     cap: int,
     carry: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Candidate pairs of one micro-batch of an incremental bucket sink:
-    every two distinct ids that share a ``key`` bucket, at least one of
-    them from ``new``, where the bucket's CUMULATIVE (store ∪ new) size is
-    at most ``cap`` distinct ids. Distinct ids, not rows: an at-least-once
-    retry re-appends its rows, and raw row counts would push a bucket the
-    batch operator keeps over the cap. Rows are ``(id_a < id_b, *key)``
-    plus ``<c>_a`` and ``<c>_b`` for each ``carry`` column; a retried
-    batch's pairs repeat, so the caller deduplicates.
+    """Candidate pairs of one micro-batch of the near-dup, semantic and
+    substring sinks: every two rows with distinct ids sharing a ``key``
+    bucket, at least one from ``new``, where the bucket's CUMULATIVE
+    (store ∪ new) size is at most ``cap`` distinct rows ``(id, *carry)``:
+    ids for the first two (``e`` is a function of the id), (id, pos)
+    occurrences for substrings, as their batch operators cap. Distinct,
+    not raw: an at-least-once retry re-appends its rows, and raw counts
+    would push a bucket the batch operator keeps over the cap. Rows are
+    ``(id_a < id_b, *key)`` plus ``<c>_a`` and ``<c>_b`` for each
+    ``carry`` column; a retried batch's pairs repeat, so the caller
+    deduplicates.
 
     One shuffle. Only the store rows in buckets ``new`` touches can pair,
     so a broadcast semi-join keeps those. With ``new`` they cross a single
-    exchange clustered by ``key``, where a window ranks the distinct ids of
-    each bucket: its size is the top rank, with no second exchange and no
-    join back. The under-cap ``new`` rows then merge-join the under-cap
+    exchange clustered by ``key``, where a window ranks the distinct rows
+    of each bucket: its size is the top rank, with no second exchange and
+    no join back. The under-cap ``new`` rows then merge-join the under-cap
     rows within the same partitions; both sides read the one exchange.
     new × new matches keep only ``id_n < id_o``, so each within-batch pair
     is joined once."""
@@ -362,7 +371,7 @@ def _capped_bucket_pairs(
         touched.withColumn("_new", F.lit(False))
         .unionByName(new.select(*cols).withColumn("_new", F.lit(True)))
         .filter(F.col("id").isNotNull())
-        .withColumn("_r", F.dense_rank().over(bucket.orderBy("id")))
+        .withColumn("_r", F.dense_rank().over(bucket.orderBy("id", *carry)))
         .withColumn("_n", F.max("_r").over(bucket))
         .filter(F.col("_n") <= cap)
     )
@@ -410,11 +419,11 @@ def _bucket_pair_step(
     cap: int,
     emit=lambda pairs: pairs,
 ) -> None:
-    """The store step of an incremental bucket-pair sink: pin the batch's
-    store rows ``new`` once, append ``emit(pairs).distinct()`` of
-    :func:`_capped_bucket_pairs` against the store to ``out_dir``, then
+    """The store step of the near-dup, semantic and substring sinks: pin
+    the batch's store rows ``new`` once, append ``emit(pairs).distinct()``
+    of :func:`_capped_bucket_pairs` against the store to ``out_dir``, then
     append ``new`` to the store. The store columns are ``schema``'s; the
-    only carried column is whatever of them is not ``id`` or ``key``."""
+    carried columns are those not ``id`` or in ``key``."""
     new = new.localCheckpoint(eager=True)  # feeds the pair plan and the append
     store = _read_store(new.sparkSession, store_dir, schema)
     carry = tuple(c for c in store.columns if c != "id" and c not in key)
@@ -602,6 +611,7 @@ def incremental_neardup_stream(
     Same at-least-once caveat as incremental_dedup_stream: a retried batch
     re-appends signatures and pairs; dedup on read restores exactly-once.
     """
+    _check_cap("max_bucket", max_bucket)
     from dampr_spark.operators.dedup import _banded_signatures
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
@@ -966,8 +976,6 @@ def semantic_dedup_stream(
     redelivered vector from dominating itself) and re-appends its novel
     rows — dedup-on-read by id restores exactly-once, the module-wide
     discipline."""
-    from pyspark.errors import AnalysisException
-
     from dampr_spark.functions.vector import valid_vector
 
     nprobe = min(ivf.nprobe, len(ivf.centroids))
@@ -992,7 +1000,10 @@ def semantic_dedup_stream(
         members = ivf.assign(batch, vec_col=vec_col).select(
             "list_id", F.col(id_col).alias("nid"), F.col(vec_col).alias("mv")
         )
-        try:
+        # Asked of the store path's Hadoop FileSystem: reading a missing
+        # store logs a FileNotFoundException stack trace before it raises.
+        have_store = bool(ivf.store_shard_ids(spark, store_dir))
+        if have_store:
             store = (
                 # decode=True: the shared codec-aware read path — on an
                 # sq8 store the byte codes are decoded AFTER the list_id
@@ -1009,9 +1020,6 @@ def semantic_dedup_stream(
                 )
             )
             members = members.unionByName(store)
-            have_store = True
-        except AnalysisException:
-            have_store = False
         dominated = ivf._dominated_qids(probers, members, threshold)
         novel = batch.join(
             dominated.select(F.col("qid").alias(id_col)), id_col, "left_anti"
@@ -1070,6 +1078,9 @@ def semantic_dedup_retractions(
     return emitted.join(kept.select(id_col), id_col, "left_anti")
 
 
+_SUBSTRING_STORE = "id long, pos int, gram long"
+
+
 def incremental_substring_stream(
     docs_stream: DataFrame,
     store_dir: str,
@@ -1081,14 +1092,15 @@ def incremental_substring_stream(
     max_posting: int = 16,
 ):
     """Streaming incremental SUBSTRING dedup via ``foreachBatch`` — the
-    suffix-run twin of :func:`incremental_neardup_stream`: every
-    micro-batch (a) explodes its documents into positional anchor rows
-    (8-byte xxhash64 keys — the batch operator's ``hash_anchors`` scale
-    path), (b) joins them against the PERSISTED anchor store AND
-    themselves to form matched-anchor pairs, (c) extends pairs into
-    maximal repeated spans ≥ ``min_len`` tokens (the batch operator's own
-    ``spans_from_anchor_pairs`` run-extension), then (d) appends its
-    anchors to the store.
+    suffix-run twin of :func:`incremental_neardup_stream`, on the same
+    store step (:func:`_bucket_pair_step`, keyed by gram and carrying
+    ``pos``; 8 Spark jobs per batch after the first): every micro-batch
+    explodes its documents into positional anchor rows (8-byte xxhash64
+    keys — the batch operator's ``hash_anchors`` scale path), pairs them
+    with the PERSISTED anchor store AND themselves, extends the matched
+    anchors into maximal repeated spans ≥ ``min_len`` tokens (the batch
+    operator's own ``spans_from_anchor_pairs``), then appends its anchors
+    to the store.
 
     A doc pair's ENTIRE diagonal structure is computable in the batch
     where its later member arrives (both docs' full anchor rows exist by
@@ -1096,98 +1108,44 @@ def incremental_substring_stream(
     no gram ever over ``max_posting``, the union of emitted spans EQUALS
     the full-corpus batch operator's output (pinned by the equivalence
     test). ``max_posting`` caps the CUMULATIVE (store + batch) posting of
-    each gram; once over, the gram stops pairing for this and every later
+    each gram in distinct (id, pos) occurrences, the batch operator's
+    unit; once over, the gram stops pairing for this and every later
     batch — early spans that used it while cold cannot be retracted from
     an append-only sink, so under an active cap the stream's span
     COVERAGE is a superset of the batch operator's (batch splits runs at
     finally-hot grams; pinned by the cap test). State is one (id, pos,
-    gram) row per token position — inherent to substring-level dedup;
-    bucket the store by gram at scale so each batch's join shuffles only
-    the batch side.
+    gram) row per token position — inherent to substring-level dedup.
 
-    Same at-least-once caveat as the other incremental sinks: a retried
-    batch re-appends anchors and spans; distinct-on-read restores
-    exactly-once."""
+    At-least-once: a retried batch re-appends anchors and spans, and
+    distinct-on-read restores exactly-once. A redelivered document's
+    anchors meet both their store copy and their batch copy, so the
+    matched-anchor pairs are deduplicated before the run extension: a
+    repeated pair would split its diagonal's run."""
     if min_len < anchor_tokens:
         raise ValueError(
             f"min_len ({min_len}) must be >= anchor_tokens ({anchor_tokens}): "
             "runs are detected at anchor granularity (same contract as the "
             "batch operator)"
         )
+    _check_cap("max_posting", max_posting)
     from dampr_spark.operators.dedup import (
         positional_anchor_rows,
         spans_from_anchor_pairs,
     )
 
+    def spans(pairs: DataFrame) -> DataFrame:
+        anchored = pairs.select(
+            "id_a", "pos_a", "id_b", (F.col("pos_b") - F.col("pos_a")).alias("offset")
+        ).distinct()
+        return spans_from_anchor_pairs(anchored, anchor_tokens, min_len)
+
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        new_pos = positional_anchor_rows(
+        new = positional_anchor_rows(
             batch_df, text_col, id_col, anchor_tokens, hash_anchors=True
-        ).localCheckpoint(eager=True)
-        store = _read_store(spark, store_dir, "id long, pos int, gram long")
-        hot = (
-            store.select("gram")
-            .unionByName(new_pos.select("gram"))
-            .groupBy("gram")
-            .agg(F.count(F.lit(1)).alias("_psz"))
-            .filter(F.col("_psz") > max_posting)
-            .select("gram")
         )
-        store_p = store.join(hot, "gram", "left_anti")
-        new_p = new_pos.join(hot, "gram", "left_anti").localCheckpoint(
-            eager=True
+        _bucket_pair_step(
+            new, store_dir, _SUBSTRING_STORE, out_dir, ["gram"], max_posting, spans
         )
-        n = new_p.select(
-            F.col("id").alias("n_id"), F.col("pos").alias("n_pos"), "gram"
-        )
-        o = store_p.select(
-            F.col("id").alias("o_id"), F.col("pos").alias("o_pos"), "gram"
-        )
-        # pair diagonal is keyed lower-id-first, exactly like the batch
-        # operator's sorted-struct pairing. The n_id != o_id guard covers
-        # the at-least-once case: a RETRIED batch re-delivers docs whose
-        # anchors are already in the store, and a self-match would
-        # fabricate a whole-doc (X, X) span that distinct-on-read cannot
-        # remove (the batch operator filters id_a != id_b the same way).
-        cross = (
-            n.join(o, "gram")
-            .filter(F.col("n_id") != F.col("o_id"))
-            .select(
-                F.least("n_id", "o_id").alias("id_a"),
-                F.when(F.col("n_id") < F.col("o_id"), F.col("n_pos"))
-                .otherwise(F.col("o_pos"))
-                .alias("pos_a"),
-                F.greatest("n_id", "o_id").alias("id_b"),
-                (
-                    F.when(F.col("n_id") < F.col("o_id"), F.col("o_pos")).otherwise(
-                        F.col("n_pos")
-                    )
-                    - F.when(F.col("n_id") < F.col("o_id"), F.col("n_pos")).otherwise(
-                        F.col("o_pos")
-                    )
-                ).alias("offset"),
-            )
-        )
-        within = (
-            n.join(
-                new_p.select(
-                    F.col("id").alias("b_id"), F.col("pos").alias("b_pos"), "gram"
-                ),
-                "gram",
-            )
-            .filter(F.col("n_id") < F.col("b_id"))
-            .select(
-                F.col("n_id").alias("id_a"),
-                F.col("n_pos").alias("pos_a"),
-                F.col("b_id").alias("id_b"),
-                (F.col("b_pos") - F.col("n_pos")).alias("offset"),
-            )
-        )
-        spans = spans_from_anchor_pairs(
-            cross.unionByName(within), anchor_tokens, min_len
-        )
-        spans.write.mode("append").parquet(out_dir)
-        new_pos.write.mode("append").parquet(store_dir)
 
     return _start_batches(docs_stream, handle, out_dir)
 
@@ -1297,9 +1255,9 @@ def scd2_state_stream(
     byte-identically from the same inputs, making the closed-row
     re-appends exact duplicates that read-time dedup on (user_id,
     valid_from) removes. Versions ≤ N-2 are pruned after the v=N write
-    (v=N-1 must survive in case batch N itself retries); on stores where
-    the driver can't delete (object stores), point a lifecycle rule at
-    the prefix instead.
+    (v=N-1 must survive in case batch N itself retries), listed and
+    deleted through ``open_dir``'s Hadoop FileSystem, so a URI prunes
+    like a plain path.
 
     Scale notes: the open store is ONE row per user; at 100 TB write it
     user-bucketed (operators/bucketing) and rewrite only the buckets whose
@@ -1317,9 +1275,6 @@ def _scd2_apply_batch(
     """One SCD2 micro-batch merge — module-level so the retry-idempotence
     test can replay a batch with its ORIGINAL batch_id, exactly what a
     foreachBatch retry does."""
-    import os
-    import shutil
-
     from pyspark.sql.window import Window
 
     from dampr_spark.plans.eventops import state_runs
@@ -1359,12 +1314,25 @@ def _scd2_apply_batch(
         "user_id", "state", "valid_from", "first_eid", "n_events"
     ).write.mode("overwrite").parquet(f"{open_dir}/v={batch_id}")
     # Prune stale versions, keeping v=N-1 (batch N's own retry input).
-    try:
-        for entry in os.listdir(open_dir):
-            if entry.startswith("v=") and int(entry[2:]) <= batch_id - 2:
-                shutil.rmtree(os.path.join(open_dir, entry), ignore_errors=True)
-    except (OSError, ValueError):
-        pass  # non-local store: prune via a lifecycle rule instead
+    fs, versions = _scd2_versions(spark, open_dir)
+    for v, path in versions.items():
+        if v <= batch_id - 2:
+            fs.delete(path, True)
+
+
+def _scd2_versions(spark: SparkSession, open_dir: str):
+    """The path's Hadoop FileSystem and the ``{N: Path}`` of its ``v=N``
+    open-store versions (none before the first batch). Listed through
+    the FileSystem, so a ``file://`` or object-store URI lists like a
+    plain path."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(open_dir)
+    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.exists(hpath):
+        return fs, {}
+    names = ((st.getPath(), st.getPath().getName()) for st in fs.listStatus(hpath))
+    return fs, {
+        int(n[2:]): p for p, n in names if n.startswith("v=") and n[2:].lstrip("-").isdigit()
+    }
 
 
 _SCD2_OPEN_SCHEMA = (
@@ -1376,16 +1344,7 @@ _SCD2_OPEN_SCHEMA = (
 def scd2_open_view(spark: SparkSession, open_dir: str) -> DataFrame:
     """The live open-interval store: the highest ``v=<batch>`` version
     under ``open_dir`` (empty frame if no batch has committed yet)."""
-    import os
-
-    try:
-        versions = [
-            int(e[2:])
-            for e in os.listdir(open_dir)
-            if e.startswith("v=") and e[2:].lstrip("-").isdigit()
-        ]
-    except OSError:
-        versions = []
+    _, versions = _scd2_versions(spark, open_dir)
     if not versions:
         return spark.createDataFrame([], _SCD2_OPEN_SCHEMA)
     return spark.read.parquet(f"{open_dir}/v={max(versions)}")
@@ -1667,6 +1626,7 @@ def semantic_neardup_stream(
     Same at-least-once caveat as the other incremental sinks: a retried
     batch re-appends; the (id_a < id_b, same deterministic cos_sim) rows
     dedup on read."""
+    _check_cap("max_cell", max_cell)
     from dampr_spark.operators.similarity import grid_cells
     from dampr_spark.functions.vector import cosine
 

@@ -598,15 +598,17 @@ def _write_doc_batches(in_dir: str, batches) -> None:
         )
 
 
-def _neardup_replay(spark, in_dir: str, store: str, out: str, **kw):
-    """Run incremental_neardup_stream over every file now in ``in_dir``
-    (one file a trigger) to completion; returns the finished query."""
+def _replay(spark, stream_fn, in_dir: str, store: str, out: str, **kw):
+    """Run the store-backed ``stream_fn`` (e.g.
+    ``streaming.incremental_neardup_stream``) over every file now in
+    ``in_dir`` (one file a trigger) to completion; returns the finished
+    query."""
     stream = (
         spark.readStream.schema("doc_id long, text string")
         .option("maxFilesPerTrigger", 1)
         .parquet(in_dir)
     )
-    q = streaming.incremental_neardup_stream(stream, store, out, **kw)
+    q = stream_fn(stream, store, out, **kw)
     q.awaitTermination()
     return q
 
@@ -627,8 +629,6 @@ def test_incremental_neardup_stream_jobs_per_batch(spark, sf_dir, tmp_path_facto
     and the two appends — 5 Spark jobs. Jobs are keyed by batch the way
     Spark labels them: the query's run id is their job group and
     ``batch = N`` is in each description."""
-    import re
-
     from dampr_spark.sources.readers import read_table
 
     base = tmp_path_factory.mktemp("neardup_jobs")
@@ -638,7 +638,17 @@ def test_incremental_neardup_stream_jobs_per_batch(spark, sf_dir, tmp_path_facto
         for r in read_table(spark, sf_dir, "documents").select("doc_id", "text").collect()
     ]
     _write_doc_batches(in_dir, [rows[i::3] for i in range(3)])
-    q = _neardup_replay(spark, in_dir, store, out, max_bucket=3)
+    q = _replay(spark, streaming.incremental_neardup_stream, in_dir, store, out, max_bucket=3)
+    by_batch = _jobs_by_batch(spark, q)
+    assert sorted(by_batch) == [0, 1, 2], by_batch
+    assert all(by_batch[b] <= 5 for b in (1, 2)), by_batch
+
+
+def _jobs_by_batch(spark, q) -> dict[int, int]:
+    """Spark jobs a finished streaming query ran, per micro-batch: the
+    query's run id is their job group and ``batch = N`` is in each
+    description."""
+    import re
 
     sc = spark.sparkContext
     status = sc._jsc.sc().statusStore()
@@ -648,8 +658,7 @@ def test_incremental_neardup_stream_jobs_per_batch(spark, sf_dir, tmp_path_facto
         m = re.search(r"batch = (\d+)", desc.get()) if desc.isDefined() else None
         if m:
             by_batch[int(m.group(1))] = by_batch.get(int(m.group(1)), 0) + 1
-    assert sorted(by_batch) == [0, 1, 2], by_batch
-    assert all(by_batch[b] <= 5 for b in (1, 2)), by_batch
+    return by_batch
 
 
 def test_incremental_neardup_stream_bucket_crosses_cap_in_batch(
@@ -679,11 +688,11 @@ def test_incremental_neardup_stream_bucket_crosses_cap_in_batch(
 
     # Batch 0 alone: the family bucket holds 2 <= cap ids and pairs.
     _write_doc_batches(in_dir, [b0])
-    _neardup_replay(spark, in_dir, store, out, max_bucket=cap)
+    _replay(spark, streaming.incremental_neardup_stream, in_dir, store, out, max_bucket=cap)
     assert family_rows() == 16  # (1, 2) from each of the 16 shared bands
     # Batch 1 takes the family to 4 > cap ids: no family pair is emitted.
     _write_doc_batches(in_dir, [b0, b1])
-    _neardup_replay(spark, in_dir, store, out, max_bucket=cap)
+    _replay(spark, streaming.incremental_neardup_stream, in_dir, store, out, max_bucket=cap)
     assert family_rows() == 16
     got = {(r.id_a, r.id_b) for r in spark.read.parquet(out).collect()}
     assert (20, 21) in got and (3, 4) not in got
@@ -716,7 +725,7 @@ def test_incremental_neardup_stream_redelivered_batch(spark, tmp_path_factory):
     b0 = [(1, family)] + [(10 + i, _words_doc(40 + i)) for i in range(4)]
     b1 = b0 + [(2, family), (3, family)]
     _write_doc_batches(in_dir, [b0, b1])
-    _neardup_replay(spark, in_dir, store, out, max_bucket=cap)
+    _replay(spark, streaming.incremental_neardup_stream, in_dir, store, out, max_bucket=cap)
 
     pairs = spark.read.parquet(out)
     assert pairs.filter(F.col("id_a") == F.col("id_b")).count() == 0
@@ -1022,7 +1031,11 @@ def test_incremental_substring_stream_redelivery_no_self_spans(
     """At-least-once: re-processing the same input against an already-
     populated anchor store (fresh checkpoint = every batch re-delivered)
     must not fabricate (X, X) self-spans — and distinct-on-read still
-    equals the batch operator."""
+    equals the batch operator. The retry emits nothing new on read: its
+    whole-doc re-delivery re-emits the first run's span. This test alone
+    cannot see repeated anchor pairs (they split the retry's run into
+    fragments under ``min_len``, so the first run's span still stands);
+    the redelivered-doc test below can."""
     import glob
     import os
     import shutil
@@ -1064,6 +1077,86 @@ def test_incremental_substring_stream_redelivery_no_self_spans(
         ).collect()
     }
     assert {tuple(r) for r in got.collect()} == want
+
+
+def test_incremental_substring_stream_redelivered_doc_keeps_span(
+    spark, tmp_path_factory
+):
+    """Batch 0 = {B}, batch 1 = {A, B again}: every (A, B) anchor pair
+    meets B's store copy and its batch copy. The pairs must be counted
+    once, or the repeated pairs break the run detection on their diagonal
+    and the 25-token span comes out as fragments under ``min_len``."""
+    from dampr_spark.operators.dedup import repeated_substring_spans
+
+    def w(p, n):
+        return " ".join(f"{p}{i}" for i in range(n))
+
+    shared = w("s", 25)
+    a, b = (1, w("a", 4) + " " + shared), (2, w("b", 4) + " " + shared)
+    base = tmp_path_factory.mktemp("substr_redelivered_doc")
+    in_dir, store, out = (str(base / d) for d in ("in", "store", "out"))
+    _write_doc_batches(in_dir, [[b], [a, b]])
+    _replay(spark, streaming.incremental_substring_stream, in_dir, store, out, min_len=20)
+
+    got = {tuple(r) for r in spark.read.parquet(out).distinct().collect()}
+    want = {
+        tuple(r)
+        for r in repeated_substring_spans(
+            spark.createDataFrame([a, b], "doc_id long, text string"),
+            min_len=20,
+            hash_anchors=True,
+        ).collect()
+    }
+    assert want == {(1, 5, 2, 5, 25)}
+    assert got == want, f"missing={want - got} extra={got - want}"
+
+
+def test_incremental_substring_stream_jobs_per_batch(spark, sf_dir, tmp_path_factory):
+    """Each substring micro-batch after the first is the shared store step
+    (see the near-dup jobs test) plus the run extension of its spans: at
+    most 8 Spark jobs."""
+    from dampr_spark.sources.readers import read_table
+
+    base = tmp_path_factory.mktemp("substr_jobs")
+    in_dir, store, out = (str(base / d) for d in ("in", "store", "out"))
+    rows = [
+        (r.doc_id, r.text)
+        for r in read_table(spark, sf_dir, "documents").select("doc_id", "text").collect()
+    ]
+    _write_doc_batches(in_dir, [rows[i::3] for i in range(3)])
+    q = _replay(spark, streaming.incremental_substring_stream, in_dir, store, out, min_len=20)
+    by_batch = _jobs_by_batch(spark, q)
+    assert sorted(by_batch) == [0, 1, 2], by_batch
+    assert all(by_batch[b] <= 8 for b in (1, 2)), by_batch
+
+
+@pytest.mark.parametrize("cap", [0, -5])
+@pytest.mark.parametrize(
+    "fn, knob",
+    [
+        ("incremental_neardup_stream", "max_bucket"),
+        ("semantic_neardup_stream", "max_cell"),
+        ("incremental_substring_stream", "max_posting"),
+    ],
+)
+def test_bucket_stream_cap_below_one_raises_at_call(
+    spark, tmp_path_factory, fn, knob, cap
+):
+    """A bucket cap below 1 would keep no bucket and emit no pair in any
+    batch; it is refused when the stream is called, before any query
+    starts."""
+    import os
+
+    base = tmp_path_factory.mktemp("bad_cap")
+    stream = spark.readStream.schema("doc_id long, text string").parquet(str(base))
+    extra = {"bounds": ([0.0] * 4, [1.0] * 4)} if fn == "semantic_neardup_stream" else {}
+    active = len(spark.streams.active)
+    with pytest.raises(ValueError, match=knob):
+        getattr(streaming, fn)(
+            stream, str(base / "store"), str(base / "out"), **extra, **{knob: cap}
+        )
+    assert len(spark.streams.active) == active
+    assert not os.path.exists(base / "out_checkpoint")
 
 
 def test_dsir_score_stream_equals_batch(spark, sf_dir, tmp_path_factory):
@@ -1193,6 +1286,37 @@ def test_scd2_state_stream_matches_batch(spark, sf_dir, tmp_path_factory):
         .count()
     )
     assert closed_dedup == closed_before  # replay added only exact dups
+
+
+def test_scd2_open_store_as_file_uri(spark, tmp_path_factory):
+    """``open_dir`` given as a ``file://`` URI is listed through its Hadoop
+    FileSystem, like a plain path: the open view equals the plain-path
+    view, and after batch N only ``v=N-1`` and ``v=N`` remain."""
+    import datetime
+    import os
+
+    from dampr_spark.streaming.pipeline import _scd2_apply_batch
+
+    t0 = datetime.datetime(2024, 1, 1)
+    events = [(1, "view"), (1, "cart"), (2, "view"), (1, "cart"), (2, "buy"),
+              (3, "view"), (1, "buy"), (3, "view"), (2, "view")]
+    rows = [
+        (user, kind, t0 + datetime.timedelta(minutes=i), i)
+        for i, (user, kind) in enumerate(events)
+    ]
+    batches = [rows[0:3], rows[3:6], rows[6:8], rows[8:]]
+    schema = "user_id long, event_type string, ts timestamp, event_id long"
+    base = tmp_path_factory.mktemp("scd2_uri")
+    views = {}
+    for name, open_dir in (("plain", str(base / "plain")), ("uri", (base / "uri").as_uri())):
+        for n, part in enumerate(batches):
+            _scd2_apply_batch(
+                spark.createDataFrame(part, schema), n, open_dir, str(base / f"{name}_out")
+            )
+        views[name] = sorted(map(tuple, streaming.scd2_open_view(spark, open_dir).collect()))
+        assert sorted(os.listdir(base / name)) == ["v=2", "v=3"], name
+    assert views["uri"] == views["plain"]
+    assert len(views["plain"]) == 3  # one open interval per user
 
 
 def test_hll_stream_equals_batch_sketch(spark, sf_dir, tmp_path_factory):
