@@ -37,6 +37,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from dampr_spark.operators._knobs import check_range
+
 _SKETCH_SCHEMA = "item string, wt long"
 
 
@@ -178,6 +180,8 @@ def cms_build(
     frequency sketch."""
     from pyspark.sql import functions as F
 
+    check_range("depth", depth, 1)
+    check_range("width", width, 1)
     w = F.col(weight_col) if weight_col else F.lit(1)
     cells = F.array(
         *[
@@ -257,6 +261,8 @@ def bloom_build(
     Sizing: false-positive rate ≈ (1 - e^(-k·n/m))^k for k hashes, n keys,
     m bits; k=5, m/n≈8 gives ~2%. The defaults suit a ~500-key dim — size
     ``n_bits`` to the build side, never the probe side."""
+    check_range("n_hashes", n_hashes, 1)
+    check_range("n_bits", n_bits, 1)
     bits = F.array(*[bloom_bit(F.col(item_col), j, n_bits) for j in range(n_hashes)])
     return (
         df.filter(F.col(item_col).isNotNull())
@@ -350,7 +356,9 @@ def hll_build(df: DataFrame, item_col: str, p: int = 9) -> DataFrame:
     one register-keyed aggregate (map-side partial collapses each
     partition to ≤ 2^p rows). Tables over different shards MERGE by
     groupBy(reg).max(rho) — register max is associative/idempotent, which
-    is what makes HLL the distributed/streaming distinct sketch."""
+    is what makes HLL the distributed/streaming distinct sketch. ``p``
+    is 4..16: the register index and rho share 32 md5 bits."""
+    check_range("p", p, 4, 16)
     reg, rho = hll_register(F.col(item_col), p)
     return (
         df.filter(F.col(item_col).isNotNull())

@@ -27,6 +27,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from dampr_spark.operators._knobs import check_range
+
 
 def exact_quantiles(
     df: DataFrame,
@@ -326,6 +328,7 @@ def value_histogram(
     share bounds MERGE by ``groupBy(bucket).sum(cnt)`` — addition, the CMS
     property — which is what makes this the shard-parallel /streaming
     quantile state."""
+    check_range("n_bins", n_bins, 1)
     x = F.col(value_col).cast("double")
     if hi > lo:
         b = F.least(

@@ -6,6 +6,7 @@ from __future__ import annotations
 import random
 from collections import Counter
 
+import pytest
 from pyspark.sql import functions as F
 
 from dampr_spark.operators.sketches import _mg_merge, heavy_hitters
@@ -369,6 +370,56 @@ def test_histogram_quantiles_degenerate_and_empty(spark):
     assert got == {0.1: 3.25, 0.9: 3.25}
     empty = spark.createDataFrame([(None,)], "x double")
     assert histogram_quantiles(empty, "x", [0.5]).collect() == []
+
+
+@pytest.mark.parametrize(
+    "fn, knob, value",
+    [
+        ("cms_build", "depth", 0),
+        ("cms_build", "width", 0),
+        ("bloom_build", "n_hashes", 0),
+        ("bloom_build", "n_bits", 0),
+        ("value_histogram", "n_bins", 0),
+        ("value_histogram", "n_bins", -3),
+        ("hll_build", "p", 0),
+        ("hll_build", "p", 3),
+        ("hll_build", "p", 17),
+        ("hll_build", "p", 40),
+        ("cms_stream", "width", 0),
+        ("bloom_stream", "n_hashes", 0),
+        ("histogram_stream", "n_bins", -3),
+        ("hll_stream", "p", 40),
+    ],
+)
+def test_sketch_size_out_of_range_raises_at_call(spark, tmp_path, fn, knob, value):
+    """A sketch size out of range is refused when the builder, or the
+    stream that wraps it, is called. Left through, ``n_hashes=0`` gives an
+    empty Bloom filter that rejects every probe, ``n_bins=0`` puts every
+    row in bucket -1, ``p=0`` keeps one HLL register, and ``width=0``,
+    ``n_bits=0`` or ``p=40`` die mid-stage."""
+    import os
+
+    from dampr_spark import streaming
+    from dampr_spark.operators import sketches, stats
+
+    df = spark.range(100).withColumnRenamed("id", "x")
+    stream = spark.readStream.schema("x long").parquet(str(tmp_path))
+    out = str(tmp_path / "out")
+    calls = {
+        "cms_build": lambda **k: sketches.cms_build(df, "x", **k),
+        "bloom_build": lambda **k: sketches.bloom_build(df, "x", **k),
+        "hll_build": lambda **k: sketches.hll_build(df, "x", **k),
+        "value_histogram": lambda **k: stats.value_histogram(df, "x", 0.0, 100.0, **k),
+        "cms_stream": lambda **k: streaming.cms_stream(stream, out, lambda b: b, **k),
+        "bloom_stream": lambda **k: streaming.bloom_stream(stream, out, lambda b: b, **k),
+        "histogram_stream": lambda **k: streaming.histogram_stream(
+            stream, out, F.col("x"), 0.0, 100.0, **k
+        ),
+        "hll_stream": lambda **k: streaming.hll_stream(stream, out, lambda b: b, **k),
+    }
+    with pytest.raises(ValueError, match=f"^{knob}={value} must be"):
+        calls[fn](**{knob: value})
+    assert not os.path.exists(out + "_checkpoint")
 
 
 # ---------------------------------------------------------------------------

@@ -1035,7 +1035,8 @@ def test_incremental_substring_stream_redelivery_no_self_spans(
     whole-doc re-delivery re-emits the first run's span. This test alone
     cannot see repeated anchor pairs (they split the retry's run into
     fragments under ``min_len``, so the first run's span still stands);
-    the redelivered-doc test below can."""
+    the redelivered-doc test below can. The rerun's query has a new id,
+    so the first query's store and sink files survive it."""
     import glob
     import os
     import shutil
@@ -1056,6 +1057,7 @@ def test_incremental_substring_stream_redelivery_no_self_spans(
 
     # two full stream runs; wiping the checkpoint between them re-delivers
     # batch 0 against the already-populated anchor store (the retry case)
+    counts = []
     for _ in range(2):
         stream = (
             spark.readStream.schema(docs.schema)
@@ -1067,7 +1069,11 @@ def test_incremental_substring_stream_redelivery_no_self_spans(
         )
         q.awaitTermination()
         shutil.rmtree(out + "_checkpoint", ignore_errors=True)
+        counts.append((spark.read.parquet(store).count(), spark.read.parquet(out).count()))
 
+    (store_rows, out_rows), (store_after, out_after) = counts
+    assert store_rows > 0 and out_rows > 0
+    assert (store_after, out_after) == (2 * store_rows, 2 * out_rows)
     got = spark.read.parquet(out).distinct()
     assert got.filter(F.col("id_a") == F.col("id_b")).count() == 0
     want = {
@@ -1137,24 +1143,28 @@ def test_incremental_substring_stream_jobs_per_batch(spark, sf_dir, tmp_path_fac
         ("incremental_neardup_stream", "max_bucket"),
         ("semantic_neardup_stream", "max_cell"),
         ("incremental_substring_stream", "max_posting"),
+        ("neardup_pairs_view", "max_bucket"),
+        ("semantic_pairs_view", "max_cell"),
     ],
 )
 def test_bucket_stream_cap_below_one_raises_at_call(
     spark, tmp_path_factory, fn, knob, cap
 ):
     """A bucket cap below 1 would keep no bucket and emit no pair in any
-    batch; it is refused when the stream is called, before any query
-    starts."""
+    batch, and a read view given one would return no pair; it is refused
+    when the stream or view is called, before any query starts."""
     import os
 
     base = tmp_path_factory.mktemp("bad_cap")
     stream = spark.readStream.schema("doc_id long, text string").parquet(str(base))
+    if fn.endswith("_view"):
+        args = (spark, str(base / "out"), str(base / "store"))
+    else:
+        args = (stream, str(base / "store"), str(base / "out"))
     extra = {"bounds": ([0.0] * 4, [1.0] * 4)} if fn == "semantic_neardup_stream" else {}
     active = len(spark.streams.active)
     with pytest.raises(ValueError, match=knob):
-        getattr(streaming, fn)(
-            stream, str(base / "store"), str(base / "out"), **extra, **{knob: cap}
-        )
+        getattr(streaming, fn)(*args, **extra, **{knob: cap})
     assert len(spark.streams.active) == active
     assert not os.path.exists(base / "out_checkpoint")
 
@@ -1264,8 +1274,8 @@ def test_scd2_state_stream_matches_batch(spark, sf_dir, tmp_path_factory):
     # Retry idempotence: replay the LAST batch with its original batch_id
     # (exactly what a foreachBatch retry does after a pre-commit crash).
     # The open store version must be byte-identical and the closed sink
-    # must only gain exact duplicate rows that read-time dedup removes.
-    from dampr_spark.streaming.pipeline import _scd2_apply_batch
+    # must hold the same rows: the replay replaces batch 2's closed rows.
+    from dampr_spark.streaming.pipeline import _Batch, _query_id, _scd2_apply_batch
 
     batch2 = spark.read.parquet(f"{in_dir}/b2.parquet")
     # read_events_stream's ts conversion applies to the stream; mirror it
@@ -1276,16 +1286,11 @@ def test_scd2_state_stream_matches_batch(spark, sf_dir, tmp_path_factory):
         ).otherwise(F.col("ts"))
         batch2 = batch2.withColumn("ts", F.timestamp_micros(micros))
     open_before = sorted(map(tuple, streaming.scd2_open_view(spark, open_dir).collect()))
-    closed_before = spark.read.parquet(out).count()
-    _scd2_apply_batch(batch2, 2, open_dir, out)
+    closed_before = sorted(map(tuple, spark.read.parquet(out).collect()))
+    _scd2_apply_batch(batch2, _Batch(2, _query_id(spark, out)), open_dir, out)
     open_after = sorted(map(tuple, streaming.scd2_open_view(spark, open_dir).collect()))
     assert open_after == open_before
-    closed_dedup = (
-        spark.read.parquet(out)
-        .dropDuplicates(["user_id", "valid_from"])
-        .count()
-    )
-    assert closed_dedup == closed_before  # replay added only exact dups
+    assert sorted(map(tuple, spark.read.parquet(out).collect())) == closed_before
 
 
 def test_scd2_open_store_as_file_uri(spark, tmp_path_factory):
@@ -1295,7 +1300,7 @@ def test_scd2_open_store_as_file_uri(spark, tmp_path_factory):
     import datetime
     import os
 
-    from dampr_spark.streaming.pipeline import _scd2_apply_batch
+    from dampr_spark.streaming.pipeline import _Batch, _scd2_apply_batch
 
     t0 = datetime.datetime(2024, 1, 1)
     events = [(1, "view"), (1, "cart"), (2, "view"), (1, "cart"), (2, "buy"),
@@ -1311,7 +1316,10 @@ def test_scd2_open_store_as_file_uri(spark, tmp_path_factory):
     for name, open_dir in (("plain", str(base / "plain")), ("uri", (base / "uri").as_uri())):
         for n, part in enumerate(batches):
             _scd2_apply_batch(
-                spark.createDataFrame(part, schema), n, open_dir, str(base / f"{name}_out")
+                spark.createDataFrame(part, schema),
+                _Batch(n, "q"),
+                open_dir,
+                str(base / f"{name}_out"),
             )
         views[name] = sorted(map(tuple, streaming.scd2_open_view(spark, open_dir).collect()))
         assert sorted(os.listdir(base / name)) == ["v=2", "v=3"], name
@@ -1744,6 +1752,11 @@ def test_incremental_neardup_stream_soak_bounded_state(spark, tmp_path_factory):
     early = statistics.median(durs[:third])
     late = statistics.median(durs[-third:])
     assert late <= 4 * early + 1000, f"per-batch latency grew: {early}ms -> {late}ms"
+    # The sinks stay flat: a read of 99 earlier batches' files runs no more
+    # Spark jobs than a read of one (batch directories past 32 would add
+    # a listing job to every read).
+    by_batch = _jobs_by_batch(spark, q)
+    assert by_batch[99] <= by_batch[1], by_batch
 
     # 100-way splitting must not change the candidate set.
     got = {(r.id_a, r.id_b) for r in spark.read.parquet(out).distinct().collect()}
@@ -1830,3 +1843,159 @@ def test_embedding_drift_stream_flags_shifted_space(spark, tmp_path_factory):
         q.awaitTermination()
         psi = spark.read.parquet(out).first().psi
         assert check(psi), (name, psi)
+
+
+_RETRY_STREAMS = [
+    "incremental_dedup_stream",
+    "incremental_neardup_stream",
+    "incremental_novelty_stream",
+    "incremental_substring_stream",
+    "semantic_neardup_stream",
+    "semantic_dedup_stream",
+    "scd2_state_stream",
+    "cms_stream",
+    "hll_stream",
+    "bloom_stream",
+    "histogram_stream",
+    "ols_stream",
+    "value_drift_stream",
+    "embedding_drift_stream",
+    "dsir_score_stream",
+    "logreg_score_stream",
+]
+
+
+def _retry_case(spark, sf_dir, name: str, base):
+    """For the stream ``name``: its input table, a function starting it
+    over a stream of that table, the raw sink directories it writes, and
+    its read views (functions of the session)."""
+    from dampr_spark.sources.readers import read_table
+
+    store, out = str(base / "store"), str(base / "out")
+    docs = read_table(spark, sf_dir, "documents")
+    emb = read_table(spark, sf_dir, "embeddings")
+    events = read_table(spark, sf_dir, "events")
+
+    def items(df):
+        return df.select(F.explode(F.split("text", " ")).alias("w"))
+
+    if name in ("incremental_dedup_stream", "incremental_novelty_stream"):
+        return docs, lambda s: getattr(streaming, name)(s, store, out), [out, store], []
+    if name == "incremental_neardup_stream":
+        start = lambda s: streaming.incremental_neardup_stream(s, store, out, max_bucket=4)  # noqa: E731
+        view = lambda sp: streaming.neardup_pairs_view(sp, out, store, max_bucket=4)  # noqa: E731
+        return docs, start, [out, store], [view]
+    if name == "incremental_substring_stream":
+        start = lambda s: streaming.incremental_substring_stream(s, store, out, min_len=20)  # noqa: E731
+        return docs, start, [out, store], []
+    if name == "semantic_neardup_stream":
+        from dampr_spark.operators.similarity import fit_grid_bounds
+
+        bounds = fit_grid_bounds(emb, dims=4)
+        start = lambda s: streaming.semantic_neardup_stream(  # noqa: E731
+            s, store, out, bounds, tau=0.3, max_cell=8
+        )
+        view = lambda sp: streaming.semantic_pairs_view(sp, out, store, max_cell=8)  # noqa: E731
+        return emb, start, [out, store], [view]
+    if name == "semantic_dedup_stream":
+        from dampr_spark.operators.similarity import IVFIndex
+        from dampr_spark.streaming.pipeline import semantic_dedup_stream
+
+        ivf = IVFIndex(n_lists=4, nprobe=2, seed=42).fit(emb, sample_size=100)
+        # the IVF shard store keeps its own append scheme (a retry's
+        # duplicate shard is inert), so only the sink is compared
+        start = lambda s: semantic_dedup_stream(s, ivf, store, out, threshold=0.3)  # noqa: E731
+        return emb, start, [out], []
+    if name == "scd2_state_stream":
+        start = lambda s: streaming.scd2_state_stream(s, store, out)  # noqa: E731
+        return events, start, [out], [lambda sp: streaming.scd2_open_view(sp, store)]
+    if name in ("cms_stream", "hll_stream", "bloom_stream"):
+        view = getattr(streaming, name.replace("_stream", "_view"))
+        return docs, lambda s: getattr(streaming, name)(s, out, items), [out], [
+            lambda sp: view(sp, out)
+        ]
+    if name == "histogram_stream":
+        start = lambda s: streaming.histogram_stream(s, out, F.col("value"), 0.0, 120.0)  # noqa: E731
+        return events, start, [out], [lambda sp: streaming.histogram_view(sp, out)]
+    if name == "ols_stream":
+        start = lambda s: streaming.ols_stream(  # noqa: E731
+            s, out, F.col("event_type"), F.dayofyear("ts"), F.col("value")
+        )
+        return events, start, [out], [lambda sp: streaming.ols_view(sp, out)]
+    if name == "value_drift_stream":
+        lo, hi, ref = streaming.fit_value_histogram(events)
+        return events, lambda s: streaming.value_drift_stream(s, ref, lo, hi, out), [out], []
+    if name == "embedding_drift_stream":
+        bounds, ref = streaming.fit_embedding_cell_histogram(emb)
+        return emb, lambda s: streaming.embedding_drift_stream(s, ref, bounds, out), [out], []
+    if name == "dsir_score_stream":
+        from dampr_spark.operators.selection import dsir_log_ratios
+
+        ratios = dsir_log_ratios(docs, docs.filter(F.col("lang") == "en"))
+        return docs, lambda s: streaming.dsir_score_stream(s, ratios, out), [out], []
+    assert name == "logreg_score_stream"
+    feats = [F.length("text") / F.lit(100.0), F.col("n_chars") / F.lit(1000.0)]
+    start = lambda s: streaming.logreg_score_stream(s, [0.1, -0.2, 0.3], feats, out)  # noqa: E731
+    return docs, start, [out], []
+
+
+@pytest.mark.parametrize("name", _RETRY_STREAMS)
+def test_retried_batch_replaces_its_output(spark, sf_dir, tmp_path_factory, name):
+    """Spark re-runs a micro-batch whose commit entry is missing: the
+    handler wrote its output, and the query died before it committed.
+    After three batches, the last commit entry (and its checksum) is
+    deleted and the query restarted, so batch 2 runs again. Every raw
+    sink (exceptAll both ways, and row count) and every view must then
+    equal what the unretried run left."""
+    import glob
+    import os
+    import shutil
+
+    base = tmp_path_factory.mktemp(f"retry_{name}")
+    table, start, sinks, views = _retry_case(spark, sf_dir, name, base)
+    in_dir = str(base / "in")
+    key = table.columns[0]  # doc_id, vec_id or event_id: thirds in id order
+    q1, q2 = table.approxQuantile(key, [1 / 3, 2 / 3], 0.0)
+    parts = [
+        table.filter(F.col(key) <= q1),
+        table.filter((F.col(key) > q1) & (F.col(key) <= q2)),
+        table.filter(F.col(key) > q2),
+    ]
+    os.makedirs(in_dir)
+    for i, part in enumerate(parts):
+        part.coalesce(1).write.parquet(str(base / f"p{i}"))
+        dst = f"{in_dir}/b{i}.parquet"
+        shutil.copy(glob.glob(str(base / f"p{i}" / "*.parquet"))[0], dst)
+        os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
+
+    def run():
+        if name in ("scd2_state_stream", "histogram_stream", "ols_stream"):
+            stream = streaming.read_events_stream(spark, in_dir, max_files_per_trigger=1)
+        else:
+            stream = (
+                spark.readStream.schema(table.schema)
+                .option("maxFilesPerTrigger", 1)
+                .parquet(in_dir)
+            )
+        q = start(stream)
+        q.awaitTermination()
+        return q
+
+    run()
+    for i, sink in enumerate(sinks):
+        shutil.copytree(sink, str(base / f"before{i}"))
+    before_views = [sorted(map(tuple, v(spark).collect())) for v in views]
+
+    commits = f"{base}/out_checkpoint/commits"
+    assert sorted(os.listdir(commits)) == [".0.crc", ".1.crc", ".2.crc", "0", "1", "2"]
+    os.remove(f"{commits}/2")
+    os.remove(f"{commits}/.2.crc")
+    q = run()
+    assert [p["batchId"] for p in q.recentProgress if p["numInputRows"] > 0] == [2]
+
+    for i, sink in enumerate(sinks):
+        was, now = spark.read.parquet(str(base / f"before{i}")), spark.read.parquet(sink)
+        assert now.count() == was.count() > 0, sink
+        assert was.exceptAll(now).count() == 0 and now.exceptAll(was).count() == 0, sink
+    for v, want in zip(views, before_views):
+        assert sorted(map(tuple, v(spark).collect())) == want and want
